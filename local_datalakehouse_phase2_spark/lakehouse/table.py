@@ -45,28 +45,29 @@ from .fs import FileIO, LocalFileIO
 from .log import CommitConflictError, FileInfo, LogEntry, TransactionLog
 from .partition import PROP_PARTITION_SPEC, PROP_PARTITION_SPEC_HISTORY
 from ..localrows import _MAX_ROWS as _LOCAL_VALUES_MAX
-from ..localrows import local_df
+from ..localrows import carried_rows, local_df
 
-# DDL-string -> parsed StructType. `_parse_datatype_string` is a py4j
-# round-trip into the JVM parser; lifecycle entries resolve the SAME
-# table DDL dozens of times per run (profiled: 249 parses / ~0.34 s of
-# py4j wait in one lakehouse_catalog_branch pass). The parse is a pure
-# function of the DDL text and parsed schemas are treated as immutable
-# everywhere in this package, so a process-wide memo is safe across
-# sessions. Bounded so a pathological many-schema workload cannot grow
-# it without limit.
-_DDL_PARSE_CACHE: dict[str, T.StructType] = {}
+# DDL-string -> parsed type (as its JSON text). `_parse_datatype_string`
+# is a py4j round-trip into the JVM parser; lifecycle entries resolve
+# the SAME table DDL dozens of times per run (profiled: 249 parses /
+# ~0.34 s of py4j wait in one lakehouse_catalog_branch pass). The parse
+# is a pure function of the DDL text, so a process-wide memo is safe
+# across sessions. Every caller gets its own DataType rebuilt from
+# the memo (~0.1 ms), so a caller that mutates its schema cannot change
+# what the next caller sees. Bounded so a pathological many-schema
+# workload cannot grow it without limit.
+_DDL_PARSE_CACHE: dict[str, str] = {}
 _DDL_PARSE_CACHE_MAX = 512
 
 
-def _parse_ddl_cached(ddl: str) -> T.StructType:
-    st = _DDL_PARSE_CACHE.get(ddl)
-    if st is None:
-        st = T._parse_datatype_string(ddl)
+def _parse_ddl_cached(ddl: str) -> T.DataType:
+    js = _DDL_PARSE_CACHE.get(ddl)
+    if js is None:
+        js = T._parse_datatype_string(ddl).json()
         if len(_DDL_PARSE_CACHE) >= _DDL_PARSE_CACHE_MAX:
             _DDL_PARSE_CACHE.pop(next(iter(_DDL_PARSE_CACHE)))
-        _DDL_PARSE_CACHE[ddl] = st
-    return st
+        _DDL_PARSE_CACHE[ddl] = js
+    return T._parse_datatype_json_string(js)
 
 DEFAULT_TARGET_FILE_SIZE = 128 * 1024 * 1024  # Iceberg default; guide :234
 
@@ -142,6 +143,46 @@ FILES_SCHEMA = T.StructType(
         T.StructField(
             "partition", T.MapType(T.StringType(), T.StringType()), True
         ),
+    ]
+)
+
+REFS_SCHEMA = T.StructType(
+    [
+        T.StructField("name", T.StringType(), False),
+        T.StructField("type", T.StringType(), False),
+        T.StructField("snapshot_id", T.LongType(), False),
+    ]
+)
+
+HISTORY_SCHEMA = T.StructType(
+    [
+        T.StructField("made_current_at", T.TimestampType(), False),
+        T.StructField("snapshot_id", T.LongType(), False),
+        T.StructField("parent_id", T.LongType(), True),
+        T.StructField("is_current_ancestor", T.BooleanType(), False),
+    ]
+)
+
+ENTRIES_SCHEMA = T.StructType(
+    [
+        T.StructField("status", T.IntegerType(), False),
+        T.StructField("snapshot_id", T.LongType(), False),
+        T.StructField("sequence_number", T.LongType(), True),
+        T.StructField("content", T.IntegerType(), True),
+        T.StructField("file_path", T.StringType(), False),
+        T.StructField("file_size_in_bytes", T.LongType(), True),
+        T.StructField("record_count", T.LongType(), True),
+    ]
+)
+
+PARTITIONS_SCHEMA = T.StructType(
+    [
+        T.StructField(
+            "partition", T.MapType(T.StringType(), T.StringType()), True
+        ),
+        T.StructField("file_count", T.LongType(), False),
+        T.StructField("record_count", T.LongType(), False),
+        T.StructField("total_size_in_bytes", T.LongType(), False),
     ]
 )
 
@@ -1357,18 +1398,11 @@ class LakehouseTable:
 
     def refs(self) -> DataFrame:
         """The `<t>.refs` metadata relation (Iceberg's refs table)."""
-        schema = T.StructType(
-            [
-                T.StructField("name", T.StringType(), False),
-                T.StructField("type", T.StringType(), False),
-                T.StructField("snapshot_id", T.LongType(), False),
-            ]
-        )
         rows = [
             (r["name"], r["kind"].upper(), r["snapshot_id"])
             for r in self.log.refs().values()
         ]
-        return local_df(self.spark, rows, schema)
+        return local_df(self.spark, rows, REFS_SCHEMA)
 
     # ---- metadata views (SURVEY.md S2/S3) ----------------------------
 
@@ -1442,14 +1476,6 @@ class LakehouseTable:
         `.snapshots` alone cannot express. Stage (write-audit-publish)
         snapshots never became current and are excluded, exactly as
         Iceberg excludes unpublished WAP snapshots."""
-        schema = T.StructType(
-            [
-                T.StructField("made_current_at", T.TimestampType(), False),
-                T.StructField("snapshot_id", T.LongType(), False),
-                T.StructField("parent_id", T.LongType(), True),
-                T.StructField("is_current_ancestor", T.BooleanType(), False),
-            ]
-        )
         main = [e for e in self.log.entries() if self.log.in_main_lineage(e)]
         parent: dict[int, int | None] = {}
         prev: int | None = None
@@ -1479,7 +1505,7 @@ class LakehouseTable:
             )
             for e in main
         ]
-        return local_df(self.spark, rows, schema)
+        return local_df(self.spark, rows, HISTORY_SCHEMA)
 
     def entries(self) -> DataFrame:
         """The `<t>.entries` metadata relation (Iceberg's manifest
@@ -1488,17 +1514,6 @@ class LakehouseTable:
         the committing snapshot and the file's content class. The
         forensic view: `.files` says what is live, `.entries` says
         which commit added or removed each file."""
-        schema = T.StructType(
-            [
-                T.StructField("status", T.IntegerType(), False),
-                T.StructField("snapshot_id", T.LongType(), False),
-                T.StructField("sequence_number", T.LongType(), True),
-                T.StructField("content", T.IntegerType(), True),
-                T.StructField("file_path", T.StringType(), False),
-                T.StructField("file_size_in_bytes", T.LongType(), True),
-                T.StructField("record_count", T.LongType(), True),
-            ]
-        )
         rows = []
         for e in self.log.entries():
             for fi in e.added_files:
@@ -1517,7 +1532,7 @@ class LakehouseTable:
                 rows.append(
                     (2, e.snapshot_id, None, None, os.path.join(self.table_dir, p), None, None)
                 )
-        return local_df(self.spark, rows, schema)
+        return local_df(self.spark, rows, ENTRIES_SCHEMA)
 
     def all_files(self) -> DataFrame:
         """The `<t>.all_files` metadata relation (Iceberg): every file
@@ -1584,16 +1599,6 @@ class LakehouseTable:
         table): one row per live partition with file/record/byte
         counts — metadata-only, no data scan. Time-travels by
         `version` like `.files`."""
-        schema = T.StructType(
-            [
-                T.StructField(
-                    "partition", T.MapType(T.StringType(), T.StringType()), True
-                ),
-                T.StructField("file_count", T.LongType(), False),
-                T.StructField("record_count", T.LongType(), False),
-                T.StructField("total_size_in_bytes", T.LongType(), False),
-            ]
-        )
         agg: dict[tuple, list[int]] = {}
         for fi in self.log.state_at(version).values():
             if fi.content != 0:
@@ -1607,7 +1612,7 @@ class LakehouseTable:
             (dict(key) if key else None, acc[0], acc[1], acc[2])
             for key, acc in sorted(agg.items())
         ]
-        return local_df(self.spark, rows, schema)
+        return local_df(self.spark, rows, PARTITIONS_SCHEMA)
 
     # ---- writes ------------------------------------------------------
 
@@ -2903,23 +2908,85 @@ class LakehouseTable:
         return final
 
     def _write_files_local(self, df: DataFrame, target: int):
-        """Fast path for LocalRelation-backed tiny commits: write the
-        driver-held rows as ONE pyarrow parquet file, skipping Spark's
-        ~200 ms per-write job-scheduling + committer-rename floor
-        (fastwrite.py has the fidelity contract). Returns None whenever
-        the write isn't eligible — scan-backed plan, unsupported type,
-        over the target file size, or a non-local warehouse path — and
-        the caller proceeds with the Spark writer. Empty LocalRelation
-        frames ARE claimed (r16): the output matches the Spark writer's
-        observable empty-frame behavior exactly — one empty
-        schema-bearing parquet file — so the files metadata view is
-        indistinguishable."""
+        """Fast path for driver-held tiny commits: write the rows as
+        pyarrow parquet -- one file, or one per hash partition of a
+        `repartition(n, cols)` -- skipping Spark's ~200 ms per-write
+        job-scheduling + committer-rename floor (fastwrite.py has the
+        fidelity contract).
+
+        Where the rows come from:
+        - the frame `localrows.local_df` built from Arrow carries them
+          (`carried_rows`): no py4j call at all -- no plan inspection,
+          no collect. Only that exact object carries rows, so a derived
+          frame (filter, select, `_align_for_write`'s cast) takes the
+          next route;
+        - any other frame whose optimized plan is a LocalRelation (or
+          `repartition(n, cols)` over one) is collected, which runs no
+          Spark job.
+
+        Returns None whenever the write isn't eligible -- a custom
+        FileIO or non-local path, scan-backed plan, more than
+        `fastwrite.MAX_ROWS` rows, unsupported type, over the target
+        file size -- and the caller proceeds with the Spark writer. An
+        empty frame writes one empty schema-bearing file, exactly like
+        the Spark writer, so the files metadata view cannot tell them
+        apart."""
         if "://" in self.table_dir or type(self.io) is not LocalFileIO:
             # the direct os/pyarrow writes below bypass self.io; a
             # custom FileIO wrapping plain local paths (arbitration,
             # fault injection) must keep the Spark-writer path so its
             # interposition still sees every byte
             return None
+        part_cols: list[str] | None = None
+        n_parts = 0
+        rows = carried_rows(df)
+        if rows is None:
+            local = self._collect_local(df)
+            if local is None:
+                return None
+            df, rows, part_cols, n_parts = local
+        if len(rows) > fastwrite.MAX_ROWS:
+            return None
+        if not rows:
+            # Spark's FileFormatWriter special-cases a fully empty frame:
+            # ONE empty schema-bearing file, regardless of repartitioning
+            # (verified against both the scan-empty and local-empty
+            # shapes). Claim it: a delete_where that empties its affected
+            # files commits 0 survivor rows without a Spark job.
+            groups = [(0, rows)]
+        elif part_cols is None:
+            groups = [(0, rows)]
+        else:
+            pids = fastwrite.spark_partition_ids(rows, df.schema, part_cols, n_parts)
+            if pids is None:
+                return None
+            by_pid: dict[int, list] = {}
+            for r, pid in zip(rows, pids):
+                by_pid.setdefault(pid, []).append(r)
+            # file names carry the ACTUAL shuffle partition id, like the
+            # Spark writer's task numbering (empty partitions write no
+            # file, so indices may have gaps — exactly like Spark)
+            groups = [(p, by_pid[p]) for p in sorted(by_pid)]
+        tables = []
+        for pid, g in groups:
+            tbl = fastwrite.rows_to_arrow(g, df.schema)
+            if tbl is None or tbl.nbytes > target:
+                return None
+            tables.append((pid, tbl))
+        out = os.path.join(self.data_dir, f"v{uuid.uuid4().hex[:12]}")
+        os.makedirs(out, exist_ok=True)
+        for pid, tbl in tables:
+            fastwrite.write_rows(
+                tbl, os.path.join(out, f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.parquet")
+            )
+        return self._scan_written(out)
+
+    def _collect_local(self, df: DataFrame):
+        """`(frame, rows, hash key columns, partition count)` for a
+        frame whose optimized plan is a LocalRelation, or
+        `repartition(n, cols)` over one (then `frame` is the
+        LocalRelation child and the keys are set); None for any other
+        plan."""
         part_cols: list[str] | None = None
         n_parts = 0
         try:
@@ -2960,42 +3027,8 @@ class LakehouseTable:
                 return None
         except Exception:
             return None
-        rows = df.collect()  # LocalTableScanExec.executeCollect — no job
-        if len(rows) > fastwrite.MAX_ROWS:
-            return None
-        if not rows:
-            # Spark's FileFormatWriter special-cases a fully empty frame:
-            # ONE empty schema-bearing file, regardless of repartitioning
-            # (verified against both the scan-empty and local-empty
-            # shapes). Claim it: a delete_where that empties its affected
-            # files commits 0 survivor rows without a Spark job.
-            groups = [(0, rows)]
-        elif part_cols is None:
-            groups = [(0, rows)]
-        else:
-            pids = fastwrite.spark_partition_ids(rows, df.schema, part_cols, n_parts)
-            if pids is None:
-                return None
-            by_pid: dict[int, list] = {}
-            for r, pid in zip(rows, pids):
-                by_pid.setdefault(pid, []).append(r)
-            # file names carry the ACTUAL shuffle partition id, like the
-            # Spark writer's task numbering (empty partitions write no
-            # file, so indices may have gaps — exactly like Spark)
-            groups = [(p, by_pid[p]) for p in sorted(by_pid)]
-        tables = []
-        for pid, g in groups:
-            tbl = fastwrite.rows_to_arrow(g, df.schema)
-            if tbl is None or tbl.nbytes > target:
-                return None
-            tables.append((pid, tbl))
-        out = os.path.join(self.data_dir, f"v{uuid.uuid4().hex[:12]}")
-        os.makedirs(out, exist_ok=True)
-        for pid, tbl in tables:
-            fastwrite.write_rows(
-                tbl, os.path.join(out, f"part-{pid:05d}-{uuid.uuid4().hex[:12]}.parquet")
-            )
-        return self._scan_written(out)
+        # LocalTableScanExec.executeCollect — no job
+        return df, df.collect(), part_cols, n_parts
 
     def _scan_written(self, out_dir: str) -> tuple[FileInfo, ...]:
         """FileInfos for a freshly written commit dir: exact row count +

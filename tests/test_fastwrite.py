@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from local_datalakehouse_phase2_spark.lakehouse import Lakehouse
 from local_datalakehouse_phase2_spark.lakehouse import fastwrite
-from local_datalakehouse_phase2_spark.localrows import local_df
+from local_datalakehouse_phase2_spark.localrows import carried_rows, local_df
 
 
 @pytest.fixture()
@@ -196,3 +196,119 @@ def test_position_deletes_valid_against_fast_path_file(spark, lake, monkeypatch)
     t.delete_where("k % 3 = 0", mode="merge-on-read")
     got = sorted(r.k for r in lake.read("fw.mor").collect())
     assert got == [i for i in range(20) if i % 3 != 0]
+
+
+FLAT = "k bigint, s string, d double, ts timestamp"
+FLAT_ROWS = [
+    (i, f"s{i}", i * 0.25, dt.datetime(2024, 1, 1, 0, 0, i % 60, i)) for i in range(50)
+]
+
+
+def test_derived_frames_write_their_own_rows(spark, lake, monkeypatch):
+    """Only the frame local_df returns carries rows: every derived frame
+    (filter, limit, select, withColumn, a write-path cast) must commit
+    ITS rows, never the carried source rows."""
+    calls = _spy(monkeypatch)
+    src = local_df(spark, FLAT_ROWS, FLAT)
+    assert carried_rows(src) is not None
+    derived = {
+        "filter": (src.filter(F.col("k") % 7 == 0), FLAT),
+        "limit": (src.limit(5), FLAT),
+        "select": (src.select("k", "s"), "k bigint, s string"),
+        "with_column": (src.withColumn("d", F.col("d") * 2), FLAT),
+    }
+    for name, (frame, ddl) in derived.items():
+        assert carried_rows(frame) is None, name
+        t = lake.create_table(f"fw.derived_{name}", schema=ddl)
+        t.append(frame)
+        stored = lake.read(f"fw.derived_{name}").collect()
+        assert sorted(stored) == sorted(frame.collect()), name
+    assert len(calls) == len(derived)  # all still driver-side writes
+
+    # a narrower frame: _align_for_write casts int -> bigint, float ->
+    # double; the commit must hold the cast values
+    narrow = local_df(spark, [(i, i + 0.5) for i in range(10)], "k int, d float")
+    assert carried_rows(narrow) is not None
+    t = lake.create_table("fw.derived_cast", schema="k bigint, d double")
+    t.append(narrow)
+    got = lake.read("fw.derived_cast")
+    assert got.schema.simpleString() == "struct<k:bigint,d:double>"
+    assert sorted(got.collect()) == [(i, i + 0.5) for i in range(10)]
+
+
+@pytest.mark.parametrize("zone", [None, "America/New_York"])
+def test_carried_rows_equal_collect(spark, monkeypatch, zone):
+    """The rows the writer takes instead of collect() are collect(),
+    value for value and type for type: float32 rounding, bytes, and
+    timestamps (naive, and aware in another zone) included -- also when
+    the driver's local zone (which collect renders instants in) is not
+    the session's UTC."""
+    import time
+
+    if zone is not None:
+        monkeypatch.setenv("TZ", zone)
+        time.tzset()
+    try:
+        _check_carried_rows_equal_collect(spark)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def _check_carried_rows_equal_collect(spark):
+    rows = [
+        (1, 7, 0.1, 1 / 3, "a'b", b"\x00\xff", dt.date(2024, 1, 2),
+         dt.datetime(2024, 1, 2, 3, 4, 5, 123456), True),
+        (-(2**62), None, None, -0.0, "", bytearray(b"x"), None,
+         dt.datetime(2024, 6, 1, 12, tzinfo=dt.timezone(dt.timedelta(hours=2))), None),
+    ]
+    df = local_df(
+        spark, rows,
+        "k bigint, i int, f float, d double, s string, raw binary, "
+        "dte date, ts timestamp, b boolean",
+    )
+    carried, collected = carried_rows(df), df.collect()
+    assert list(carried) == collected
+    for c, r in zip(carried, collected):
+        assert [type(v) for v in c] == [type(v) for v in r], (c, r)
+
+
+def test_local_append_skips_plan_inspection_and_collect(spark, lake, monkeypatch):
+    """The commit of a local_df frame makes no JVM round trip for its
+    rows: zero DataFrame.collect calls, zero optimizedPlan() calls --
+    zero py4j method calls at all -- and still one fastwrite.write_rows
+    file."""
+    from py4j import clientserver, java_gateway
+    from pyspark.sql import DataFrame
+
+    t = lake.create_table("fw.counted", schema=FLAT)
+    t.schema()  # the table DDL's one-time parse is not the commit's cost
+    frame = local_df(spark, FLAT_ROWS, FLAT)
+    writes = _spy(monkeypatch)
+    counts = {"collect": 0, "optimizedPlan": 0, "py4j_calls": 0}
+    orig_collect = DataFrame.collect
+
+    def collect(self):
+        counts["collect"] += 1
+        return orig_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    for conn in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+
+        def send(self, command, _orig=conn.send_command):
+            kind, _target, method = (command.split("\n") + ["", ""])[:3]
+            if kind == "c":  # a method call (not a GC dereference)
+                counts["py4j_calls"] += 1
+                counts["optimizedPlan"] += method == "optimizedPlan"
+            return _orig(self, command)
+
+        monkeypatch.setattr(conn, "send_command", send)
+    t.append(frame)
+    monkeypatch.undo()
+    assert counts["collect"] == 0, f"append called DataFrame.collect {counts['collect']} time(s)"
+    assert counts["optimizedPlan"] == 0, (
+        f"append inspected the optimized plan {counts['optimizedPlan']} time(s)"
+    )
+    assert counts["py4j_calls"] == 0, f"append made {counts['py4j_calls']} py4j call(s)"
+    assert len(writes) == 1, f"{len(writes)} fastwrite.write_rows file(s), want 1"
+    assert sorted(lake.read("fw.counted").collect()) == sorted(frame.collect())

@@ -317,6 +317,25 @@ def test_schema_evolution_add_column(spark, lake):
         )
 
 
+def test_table_schema_is_a_private_copy(lake):
+    """table.schema() hands each caller its own StructType: mutating one
+    (add a field, flip nullability) must not change what the next call,
+    or another handle on the same table, returns."""
+    from pyspark.sql import types as T
+
+    lake.create_namespace("lab")
+    t = lake.create_table("lab.sch", schema="k bigint, v string")
+    first = t.schema()
+    want = first.simpleString()
+    first.add("junk", T.StringType())
+    first.fields[0].nullable = False
+    again = t.schema()
+    assert again is not first
+    assert again.simpleString() == want
+    assert all(f.nullable for f in again.fields)
+    assert lake.table("lab.sch").schema().simpleString() == want
+
+
 def test_schema_evolution_merge_across_old_files(spark, lake):
     """MERGE whose source carries an added column must upsert cleanly
     over pre-evolution files (carried rows project null)."""

@@ -10,7 +10,7 @@ import math
 import pytest
 from pyspark.sql import types as T
 
-from local_datalakehouse_phase2_spark.localrows import local_df
+from local_datalakehouse_phase2_spark.localrows import carried_rows, local_df
 
 
 def _same(spark, rows, schema):
@@ -101,3 +101,85 @@ def test_decimal(spark):
 
     rows = [(Decimal("123.45"),), (None,)]
     _same(spark, rows, "d decimal(10,2)")
+
+
+def test_flat_schema_builds_from_arrow(spark):
+    """A flat schema takes the Arrow path: a LocalRelation that carries
+    its rows, with values identical to the createDataFrame spelling
+    (tests/test_fastwrite.py checks the carried rows against collect)."""
+    rows = [
+        (1, 7, 0.1, "a'b", b"\x00\xff", dt.date(2024, 1, 2),
+         dt.datetime(2024, 1, 2, 3, 4, 5, 123456), True),
+        (-(2**62), None, -0.0, "", bytearray(b"x"), None,
+         dt.datetime(2024, 6, 1, 12, tzinfo=dt.timezone(dt.timedelta(hours=2))), None),
+    ]
+    df = _same(
+        spark, rows,
+        "k bigint, i int, f float, s string, raw binary, dte date, ts timestamp, b boolean",
+    )
+    assert (
+        df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+        == "LocalRelation"
+    )
+    assert carried_rows(df) is not None
+    # derived frames never carry the source rows
+    assert carried_rows(df.filter("k > 0")) is None
+    assert carried_rows(df.select("k")) is None
+
+
+def test_values_path_and_odd_values_carry_nothing(spark):
+    """Non-flat schemas and values whose Python type the column does
+    not claim (pyarrow would truncate 1.5 or read bytes as text) take
+    the VALUES path, which carries no rows."""
+    m = local_df(spark, [({"a": 1},)], "m map<string,bigint>")
+    assert carried_rows(m) is None
+    assert carried_rows(local_df(spark, [(1.5,)], "k bigint")) is None
+    assert carried_rows(local_df(spark, [(b"x",)], "s string")) is None
+    assert carried_rows(local_df(spark, [(1,)], "k bigint")) == ((1,),)
+
+
+def test_declared_non_null_schema_is_exact_without_fallback(spark):
+    """Declared non-nullable fields (the metadata views' schemas) plan a
+    LocalRelation with the exact declared schema on both paths, JVM
+    side included -- no createDataFrame fallback, no Spark job."""
+    flat = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("p", T.LongType(), True),
+        ]
+    )
+    nested = T.StructType(
+        [
+            T.StructField("k", T.IntegerType(), False),
+            T.StructField(
+                "m", T.MapType(T.StringType(), T.ArrayType(T.StringType())), True
+            ),
+            T.StructField("n", T.MapType(T.StringType(), T.StringType()), True),
+        ]
+    )
+    cases = [
+        (flat, [(1, dt.datetime(2024, 1, 1), None), (2, dt.datetime(2024, 1, 2), 1)]),
+        (nested, [(1, None, {"a": "b"}), (2, {"x": ["1", None]}, None)]),
+        (flat, []),
+        (nested, []),
+    ]
+    for schema, rows in cases:
+        df = local_df(spark, rows, schema)
+        qe = df._jdf.queryExecution()
+        assert qe.optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+        assert df.schema == schema
+        assert T._parse_datatype_json_string(df._jdf.schema().json()) == schema
+        want = spark.createDataFrame(rows, schema).collect()
+        assert sorted(map(str, df.collect())) == sorted(map(str, want))
+
+
+def test_null_in_non_null_field_still_raises(spark):
+    """A null where the schema forbids one is rejected, as
+    createDataFrame rejects it -- on both paths."""
+    for ddl, row in [
+        ("k bigint not null", (None,)),
+        ("k bigint not null, m map<string,string>", (None, None)),
+    ]:
+        with pytest.raises(Exception):
+            local_df(spark, [row], ddl).collect()

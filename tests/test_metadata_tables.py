@@ -198,3 +198,54 @@ def test_drop_column_guards(spark, lake):
     t3 = lake.create_table("lab.dcg3", schema="k bigint, v string")
     sql.sql("ALTER TABLE lab.dcg3 DROP COLUMN v")
     assert [f.name for f in t3.schema().fields] == ["k"]
+
+
+def test_metadata_views_are_local_relations_that_run_zero_jobs(spark, lake):
+    """Every driver-built metadata view plans a LocalRelation whose
+    schema is exactly its declared StructType (nullability included,
+    JVM side too) and collects without a single Spark job -- a view is a
+    log read, not a cluster job."""
+    from pyspark.sql import types as T
+
+    from local_datalakehouse_phase2_spark.lakehouse import table as tmod
+
+    lake.create_namespace("lab")
+    t = lake.create_table(
+        "lab.z", schema="k bigint, v string",
+        properties={"write.delete.mode": "merge-on-read"},
+    )
+    t.append(_mk(spark, 0, 10).coalesce(1))
+    t.append(_mk(spark, 10, 20).coalesce(1))
+    t.delete_where("k = 3")  # a delete file + null entries columns
+    t.overwrite(_mk(spark, 0, 5).coalesce(1))  # removed-file entries
+    views = {
+        "history": tmod.HISTORY_SCHEMA,
+        "snapshots": tmod.SNAPSHOTS_SCHEMA,
+        "entries": tmod.ENTRIES_SCHEMA,
+        "files": tmod.FILES_SCHEMA,
+        "all_files": tmod.FILES_SCHEMA,
+        "partitions": tmod.PARTITIONS_SCHEMA,
+        "refs": tmod.REFS_SCHEMA,
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for with_refs in (False, True):  # refs: empty, then populated
+        if with_refs:
+            t.create_branch("audit")
+            t.create_tag("v1")
+        for name, declared in views.items():
+            df = getattr(lake.table("lab.z"), name)()
+            plan = df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
+            assert plan == "LocalRelation", (name, plan)
+            assert df.schema == declared, name
+            jvm = T._parse_datatype_json_string(df._jdf.schema().json())
+            assert jvm == declared, (name, jvm)
+            group = f"view-gate-{name}-{with_refs}"
+            sc.setJobGroup(group, "metadata view collect")
+            try:
+                rows = df.collect()
+            finally:
+                sc.setJobGroup(None, None)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert rows or (name == "refs" and not with_refs), name
+    assert jobs == {name: 0 for name in views}, f"Spark jobs per view: {jobs}"
