@@ -104,8 +104,9 @@ record wants the catalog service a real Nessie deployment already is
 (a commit DAG in a database), which slots in behind this same module
 boundary. The lock + marker live in the warehouse root — on raw S3
 both are check-then-put, the same documented caveat as every other
-arbitration point (fs.py), resolved in production by an
-ArbitratedFileIO backend.
+arbitration point (fs.py), resolved by wrapping the store in
+ArbitratedFileIO with EndpointMutex; a local warehouse arbitrates
+itself host-wide.
 """
 
 from __future__ import annotations

@@ -15,12 +15,23 @@ path-scheme-agnostic:
   `hdfs://`, `s3a://`, or `file:` URIs. Instantiable and tested
   locally because Hadoop's `LocalFileSystem` serves `file:` paths.
 
-Durability note (same caveat Iceberg documents): exclusive-create as
-a commit arbiter is atomic on a real filesystem (POSIX, HDFS). On
-S3A, create-no-overwrite is check-then-put, so multi-writer commits
-against raw S3 need an external lock/catalog service — exactly why
-Iceberg pairs S3 with a metastore/REST catalog. The abstraction keeps
-that single arbitration point in one overridable method.
+Commit arbitration. Every commit race goes through `create_exclusive`
+(at most one winner per path), and a log-entry commit also goes
+through `create_exclusive_guarded`, whose checkpoint-floor check must
+be one step with the create against `remove_arbitrated` freeing the
+slot. Where that comes from depends on the store:
+
+- A local store arbitrates itself, host-wide. `link(2)` is an atomic
+  put-if-absent, and `LocalFileIO`'s guarded create and arbitrated
+  remove hold an exclusive `flock(2)` on the entry's directory
+  (`FlockMutex`), so every thread and process on the host serializes
+  there. Nothing to configure.
+- An object store (S3A behind `HadoopFileIO`) has neither: its
+  create-no-overwrite is check-then-put and no kernel lock spans the
+  writers' hosts. Wrap it as `ArbitratedFileIO(store,
+  EndpointMutex(...))`, a lease-and-fence conditional-put service —
+  the role Nessie plays in the reference stack (docker-compose.yml:6)
+  and a DynamoDB lock table plays for Delta Lake and Iceberg on S3.
 
 Bulk DATA reads/writes do not pass through here: Spark's own readers
 and writers (`spark.read.parquet`, `df.write.parquet`) are already
@@ -30,12 +41,10 @@ scheme-aware via the same Hadoop connectors.
 from __future__ import annotations
 
 import abc
-import hashlib
-import json
+import fcntl
 import os
 import re
 import shutil
-import socket
 import threading
 import time
 import uuid
@@ -135,39 +144,37 @@ class FileIO(abc.ABC):
         (create no-overwrite) the store provides property 1 natively.
         On raw S3, create-no-overwrite is check-then-put: two racers
         can BOTH pass the check and both return True — silently
-        losing one commit. Production object-store deployments must
-        wrap the store in `ArbitratedFileIO` with a mutex backed by a
-        real CAS service (DynamoDB conditional put, ZooKeeper,
-        a catalog's commit endpoint — exactly Iceberg's
+        losing one commit. An object store must therefore be wrapped
+        in `ArbitratedFileIO` with `EndpointMutex`, the conditional-put
+        service role (DynamoDB, a catalog's commit endpoint — Iceberg's
         pair-S3-with-a-catalog guidance, which the reference satisfies
-        via Nessie, /root/reference/docker-compose.yml:6)."""
+        via Nessie, docker-compose.yml:6)."""
 
     def create_exclusive_guarded(self, path: str, data: str, precondition) -> bool:
         """`create_exclusive`, gated by `precondition()` — the seam that
-        closes the expiry/stalled-writer slot-reuse race (r17): a commit
+        closes the expiry/stalled-writer slot-reuse race: a commit
         claiming log version v must verify v is still above the newest
         checkpoint floor AT WRITE TIME, because snapshot expiry deletes
         old entry files and frees their names for O_EXCL re-claim; a
         writer that stalled between choosing v and writing it would
         otherwise land BELOW the table head, invisible to every
-        checkpoint-anchored fold (a lost commit, observed under load by
-        tests/test_flock_mutex.py's ingest-vs-maintenance stress).
+        checkpoint-anchored fold (a lost commit;
+        tests/test_commit_floor.py).
 
-        Base implementation is check-then-create — the strongest a
-        store without an external arbiter can do, and sufficient
-        single-process (expiry and commits in one process serialize on
-        the GIL per bytecode region plus the process-local per-path
-        mutex ArbitratedFileIO defaults to). `ArbitratedFileIO`
-        overrides this to run the precondition INSIDE the per-path
-        mutex hold, where it is atomic against the (also mutex-held)
-        entry removal — airtight across processes."""
+        The check and the create must be one step against
+        `remove_arbitrated` on the same path. `LocalFileIO` and
+        `ArbitratedFileIO` make them so with a lock both methods take.
+        This base version is check-then-create, which a store with no
+        arbiter of its own cannot improve on: such a store must be
+        wrapped in `ArbitratedFileIO`."""
         if not precondition():
             return False
         return self.create_exclusive(path, data)
 
     def remove_arbitrated(self, path: str) -> None:
-        """`remove`, routed through the commit arbiter when one exists
-        (ArbitratedFileIO overrides). Only log-entry deletion needs
+        """`remove`, serialized with `create_exclusive_guarded` on the
+        same path by the store's arbiter (LocalFileIO and
+        ArbitratedFileIO override). Only log-entry deletion needs
         this — it serializes slot frees against slot claims; data-file
         deletes stay on the plain `remove` (no name-reuse hazard)."""
         self.remove(path)
@@ -315,8 +322,96 @@ def stats_from_footer(md) -> dict[str, list]:
     return out
 
 
+# ---- mutex backend contract ------------------------------------------
+#
+# A mutex backend for ArbitratedFileIO is any callable
+#
+#     mutex(path: str) -> context manager
+#
+# satisfying, at the backend's documented scope (host / multi-host),
+# the contract the conformance suite (tests/test_mutex_conformance.py)
+# enforces against every registered backend:
+#
+#   1. EXCLUSION — at most one participant is inside the context for a
+#      given canonical path at a time (two spellings of one file must
+#      arbitrate as one path: FlockMutex keys on the directory inode,
+#      EndpointMutex on the realpath).
+#   2. NO RETURN WITHOUT THE LOCK — __enter__ either acquires or
+#      raises (e.g. a bounded-wait timeout); it never yields
+#      optimistically.
+#   3. RELEASE ON EXIT — normal or exceptional exit frees the path for
+#      the next waiter.
+#   4. CRASH LIVENESS — a holder that dies without releasing must not
+#      wedge the path forever. Kernel-mediated backends (flock) get
+#      this from automatic release; lease-based backends (endpoint
+#      conditional-put: sqlite stand-in, DynamoDB, etcd) must steal
+#      holder records older than log.LOCK_STEAL_SECONDS, and a LIVE
+#      holder younger than that must never be stolen.
+#   5. NON-REENTRANT — like threading.Lock; ArbitratedFileIO never
+#      nests acquisitions of one path.
+#
+# Lease backends and FENCING: a holder stalled PAST the steal horizon
+# can overlap its thief; flock cannot exhibit this because release is
+# tied to process lifetime. The answer is a fencing token — a per-path
+# monotone counter issued on every acquire (insert or steal). A lease
+# backend yields a handle whose `validate()` checks, at the endpoint,
+# that its token is still the newest and renews the lease;
+# ArbitratedFileIO calls it under the hold immediately before each
+# protected write, so a stalled holder's late commit raises
+# StaleFenceError and the write is NEVER ISSUED. Release re-checks the
+# token and raises LockStolenError as the backstop. The residual
+# window (a second full-TTL stall between the successful validate and
+# the write itself) is the standard lease assumption; media with
+# native conditional writes (DynamoDB, S3 conditional PUT, etcd txns)
+# close it by checking the token atomically with the put. Operational
+# rule: size LOCK_STEAL_SECONDS far above any plausible GC/IO stall,
+# and treat LockStolenError as "my commit may not have survived —
+# re-plan".
+
+
+class FlockMutex:
+    """Host-wide arbiter: an exclusive `flock(2)` on the directory that
+    holds the arbitrated path. `LocalFileIO` takes it for every
+    floor-checked commit and every log-entry free; it also serves as an
+    `ArbitratedFileIO` backend for stores mounted on one host.
+
+    The kernel serializes `LOCK_EX` on the directory inode across every
+    thread and process on the host (the lock belongs to each open file
+    description, so two holders in one process exclude each other too),
+    and releases it when a holder dies. The inode is canonical: every
+    spelling of the directory (symlink, relative path, trailing slash)
+    opens the same one. The lock is per directory, not per file, so
+    all arbitrated entries of one log directory take turns. That is the
+    unit the floor check needs, and each hold is short.
+
+    Host scope only: flock over NFS or a FUSE-mounted bucket is
+    advisory at best, so writers on several hosts need `EndpointMutex`
+    (the Nessie role in the reference stack, docker-compose.yml:6).
+
+    Not reentrant: a second acquisition of the same directory from
+    inside a hold waits on itself forever.
+    """
+
+    @contextmanager
+    def __call__(self, path: str):
+        fd = os.open(os.path.dirname(path) or ".", os.O_RDONLY | os.O_DIRECTORY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            try:
+                yield
+            finally:
+                fcntl.flock(fd, fcntl.LOCK_UN)
+        finally:
+            os.close(fd)
+
+
 class LocalFileIO(FileIO):
-    """Plain-`os` implementation — the local default."""
+    """Plain-`os` implementation — the local default. It arbitrates
+    itself across every thread and process on the host: `link(2)` makes
+    `create_exclusive` atomic, and `_dir_lock` makes the floor-checked
+    create one step against `remove_arbitrated`."""
+
+    _dir_lock = FlockMutex()
 
     def makedirs(self, path: str) -> None:
         os.makedirs(path, exist_ok=True)
@@ -386,6 +481,18 @@ class LocalFileIO(FileIO):
         finally:
             os.unlink(tmp)
 
+    def create_exclusive_guarded(self, path: str, data: str, precondition) -> bool:
+        # the put goes through self.create_exclusive, so a subclass's
+        # create (and any wrapper installed on it) sees every write
+        with self._dir_lock(path):
+            if not precondition():
+                return False
+            return self.create_exclusive(path, data)
+
+    def remove_arbitrated(self, path: str) -> None:
+        with self._dir_lock(path):
+            self.remove(path)
+
     def link_or_copy(self, src: str, dst: str) -> None:
         os.makedirs(os.path.dirname(dst), exist_ok=True)
         try:
@@ -406,119 +513,6 @@ class LocalFileIO(FileIO):
     def parquet_file_stats(self, path: str) -> tuple[int, dict[str, list]]:
         md = pq.ParquetFile(path).metadata
         return md.num_rows, stats_from_footer(md)
-
-
-# ---- mutex backend contract (r14) -------------------------------------
-#
-# A mutex backend for ArbitratedFileIO is any callable
-#
-#     mutex(path: str) -> context manager
-#
-# satisfying, at the backend's documented scope (process / host /
-# multi-host), the contract the conformance suite
-# (tests/test_mutex_conformance.py) enforces against every registered
-# backend:
-#
-#   1. EXCLUSION — at most one participant is inside the context for a
-#      given canonical path at a time (two spellings of one file must
-#      arbitrate as one path: resolve symlinks / normalize before
-#      keying).
-#   2. NO RETURN WITHOUT THE LOCK — __enter__ either acquires or
-#      raises (e.g. a bounded-wait timeout); it never yields
-#      optimistically.
-#   3. RELEASE ON EXIT — normal or exceptional exit frees the path for
-#      the next waiter.
-#   4. CRASH LIVENESS — a holder that dies without releasing must not
-#      wedge the path forever. Kernel-mediated backends (flock) get
-#      this from automatic release; lease-based backends (endpoint
-#      conditional-put: sqlite stand-in, DynamoDB, etcd) must steal
-#      holder records older than log.LOCK_STEAL_SECONDS, and a LIVE
-#      holder younger than that must never be stolen.
-#   5. NON-REENTRANT — like threading.Lock; ArbitratedFileIO never
-#      nests acquisitions of one path.
-#
-# Known lease-backend caveat and the FENCING answer (r15): a holder
-# stalled PAST the steal horizon can overlap its thief; flock backends
-# cannot exhibit this because release is tied to process lifetime.
-# The complete fix is a fencing token — a per-path monotone counter
-# issued on every acquire (insert or steal) that the protected MEDIUM
-# checks at write time, rejecting writes carrying a stale token
-# (DynamoDB condition expressions, S3 conditional writes, etcd txn
-# revisions all can; Lamport's rule via Kleppmann's formulation).
-# HttpCasMutex implements the token end: its endpoint issues fences,
-# answers a conditional `/validate` ("may fence N still write?", with
-# lease renewal on success), and its release VERIFIES the fence,
-# raising LockStolenError when the path was stolen mid-hold. r16
-# closes the loop: ArbitratedFileIO calls validate() under the held
-# lock immediately before each protected write, so a stalled holder's
-# late commit raises StaleFenceError and the write is NEVER ISSUED —
-# rejection at write time, with release-time detection kept as the
-# backstop. The residual window (a second full-TTL stall between the
-# successful validate and the write itself) is the standard lease
-# assumption; media with native conditional writes (DynamoDB, S3
-# conditional PUT, etcd txns) shrink it to zero by checking the token
-# atomically with the put — FencedLocalFileIO demonstrates exactly
-# that on the local medium (sidecar fence under flock, conformance
-# clause 4f), and ArbitratedFileIO routes through its fenced put
-# automatically. Operational rule for non-fencing backends:
-# size LOCK_STEAL_SECONDS far above any plausible GC/IO stall, and
-# treat LockStolenError as "my commit may not have survived — re-plan".
-
-
-class FlockMutex:
-    """`flock(2)`-based cross-process arbiter for `ArbitratedFileIO`.
-
-    One lock file per arbitrated path, sha1-named under `lock_dir` so
-    lock files never appear in metadata listings (a `<entry>.lock`
-    sibling would leak into the log's version listing and the orphan
-    sweep). The kernel mediates `LOCK_EX` across every process on the
-    host that opens the same lock file, which upgrades the default
-    process-local arbiter to host-wide scope — the right tool when
-    "concurrent writers" means a Spark driver plus a maintenance cron
-    on one node, the common single-node lakehouse deployment this repo
-    targets (SURVEY.md §4). It is explicitly NOT a multi-host answer:
-    flock over NFS/FUSE-S3 is advisory-at-best, so a fleet of drivers
-    needs the DynamoDB/ZooKeeper/catalog-endpoint mutex (the Nessie
-    role in the reference stack, docker-compose.yml:6) behind this
-    same one-argument seam.
-
-    Lock files are never deleted (unlink-while-locked is the classic
-    flock ABA bug: a waiter blocked on the unlinked inode acquires a
-    lock nobody else can see). They are zero-byte, bounded by the
-    number of distinct arbitrated paths, and live under the table's
-    own metadata root, so the orphan sweep's protections apply.
-
-    Reentrancy: NOT reentrant (matching threading.Lock) — one
-    `create_exclusive` never nests another, which is the only call
-    site ArbitratedFileIO routes through the mutex.
-    """
-
-    def __init__(self, lock_dir: str):
-        self.lock_dir = lock_dir
-        os.makedirs(lock_dir, exist_ok=True)
-
-    @contextmanager
-    def __call__(self, path: str):
-        import fcntl
-
-        # canonicalize before hashing: two processes spelling the same
-        # file differently (symlinked mount, relative vs absolute,
-        # trailing slash) must land on the SAME lock file or the mutex
-        # silently grants no exclusion. realpath resolves symlinks and
-        # normalizes; scheme-qualified paths (no real file) fall back
-        # to normpath of the raw string.
-        canon = os.path.realpath(path) if "://" not in path else os.path.normpath(path)
-        name = hashlib.sha1(canon.encode("utf-8")).hexdigest() + ".lock"
-
-        fd = os.open(os.path.join(self.lock_dir, name), os.O_CREAT | os.O_RDWR, 0o644)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-        finally:
-            os.close(fd)
 
 
 class EndpointMutex:
@@ -547,14 +541,13 @@ class EndpointMutex:
     code — commits, ref locks, and txn markers still route through the
     one `create_exclusive` method. Not reentrant, like FlockMutex.
 
-    FENCING (r16, parity with HttpCasMutex): every successful acquire
-    (insert or steal) bumps a per-path monotone fence row; the yielded
-    handle's `validate()` — which ArbitratedFileIO calls right before
-    each protected write — checks the fence is still newest inside ONE
-    `BEGIN IMMEDIATE` transaction (the DynamoDB condition-expression
-    role) and renews the lease on success; release verifies the fence
-    and raises `LockStolenError` as the backstop when a thief acquired
-    mid-hold.
+    FENCING: every successful acquire (insert or steal) bumps a
+    per-path monotone fence row; the yielded handle's `validate()` —
+    which ArbitratedFileIO calls right before each protected write —
+    checks the fence is still newest inside ONE `BEGIN IMMEDIATE`
+    transaction (the DynamoDB condition-expression role) and renews
+    the lease on success; release verifies the fence and raises
+    `LockStolenError` as the backstop when a thief acquired mid-hold.
     """
 
     def __init__(self, db_path: str, timeout_s: float = 30.0):
@@ -694,8 +687,8 @@ class EndpointMutex:
                     ).fetchone()
                 finally:
                     con.execute("COMMIT")
-                # backstop, same rule as HttpCasMutex: skip when the
-                # body already reported the steal at write time
+                # backstop: skip when the body already reported the
+                # steal at write time
                 if (
                     cur is not None
                     and cur[0] > fence
@@ -722,7 +715,7 @@ class LockStolenError(RuntimeError):
 
 class StaleFenceError(LockStolenError):
     """Raised BEFORE the protected write when the endpoint's
-    conditional check (`/validate`) reports the holder's fence is no
+    conditional check (`validate()`) reports the holder's fence is no
     longer the newest for the path — the stalled-holder-past-TTL
     overlap, CLOSED rather than reported: the write was never issued,
     so the thief's committed bytes stand untouched and the stalled
@@ -732,292 +725,49 @@ class StaleFenceError(LockStolenError):
     working."""
 
 
-class _FenceHandle:
-    """What a fencing-capable mutex yields from its context manager:
-    the acquire's fence token plus a `validate()` the arbitrated IO
-    calls immediately before each protected write. Non-fencing
-    backends yield None (or a bare lock object) and the IO skips the
-    check — the seam stays one optional method, not a new contract."""
-
-    __slots__ = ("_mutex", "_path", "_owner", "fence")
-
-    def __init__(self, mutex: "HttpCasMutex", path: str, owner: str, fence: int):
-        self._mutex = mutex
-        self._path = path
-        self._owner = owner
-        self.fence = fence
-
-    def validate(self) -> None:
-        res = self._mutex._post(
-            "/validate",
-            {"path": self._path, "owner": self._owner, "fence": self.fence},
-        )
-        if not res.get("ok"):
-            raise StaleFenceError(
-                f"fence {self.fence} on {self._path!r} is stale (endpoint now at "
-                f"{res.get('fence')}): a thief acquired mid-hold — the protected "
-                "write was REJECTED before it was issued; re-plan from current state"
-            )
-
-
-class HttpCasMutex:
-    """HTTP conditional-put arbiter for `ArbitratedFileIO` — the
-    genuinely remote-SHAPED lease backend (r15, conformance kit's
-    third entry): cooperating writers share NOTHING but a TCP endpoint
-    (`casd.py`, run standalone), the deployment shape of a real
-    DynamoDB table / etcd cluster / Nessie server (the reference
-    stack's commit arbiter, docker-compose.yml:6,
-    spark/conf/spark-defaults.conf:8).
-
-    Acquire = one POST /acquire the SERVER applies atomically
-    (insert-if-absent, or steal when the holder row is older than
-    log.LOCK_STEAL_SECONDS — read at call time so crash-recovery tests
-    can lower it). The response carries a per-path monotone FENCE
-    token, incremented on every successful acquire including steals.
-    Release = POST /release with that fence; a response flagging the
-    fence stale means a thief acquired mid-hold, and release raises
-    `LockStolenError` AFTER freeing the row — the stalled holder
-    learns loudly that its critical section may have overlapped.
-    Media that can check a condition per write should instead store
-    the fence with the resource and reject stale-fenced writes, which
-    closes the overlap entirely (clause-4 note above).
-
-    Not reentrant, like the other backends. stdlib urllib only."""
-
-    def __init__(self, endpoint: str, timeout_s: float = 30.0):
-        # endpoint: "http://127.0.0.1:<port>"
-        self.endpoint = endpoint.rstrip("/")
-        self.timeout_s = timeout_s
-
-    def _post(self, route: str, body: dict) -> dict:
-        import urllib.request
-
-        req = urllib.request.Request(
-            f"{self.endpoint}{route}",
-            data=json.dumps(body).encode(),
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        with urllib.request.urlopen(req, timeout=max(self.timeout_s, 5.0)) as r:
-            return json.loads(r.read())
-
-    @contextmanager
-    def __call__(self, path: str):
-        from . import log as _log
-
-        canon = os.path.realpath(path) if "://" not in path else os.path.normpath(path)
-        owner = f"{socket.gethostname()}-{os.getpid()}-{threading.get_ident()}"
-        deadline = time.monotonic() + self.timeout_s
-        while True:
-            res = self._post(
-                "/acquire",
-                {"path": canon, "owner": owner, "steal_after": _log.LOCK_STEAL_SECONDS},
-            )
-            if res.get("ok"):
-                fence = res["fence"]
-                break
-            if time.monotonic() >= deadline:
-                raise RuntimeError(f"timed out waiting for CAS endpoint lock on {canon!r}")
-            time.sleep(0.005)
-        body_exc: BaseException | None = None
-        try:
-            yield _FenceHandle(self, canon, owner, fence)
-        except BaseException as e:
-            body_exc = e
-            raise
-        finally:
-            import urllib.error
-
-            rel = None
-            for attempt in range(3):
-                try:
-                    rel = self._post(
-                        "/release", {"path": canon, "owner": owner, "fence": fence}
-                    )
-                    break
-                except (urllib.error.URLError, OSError):
-                    # endpoint unreachable at release: retry briefly (a
-                    # blip shouldn't forfeit steal detection), then
-                    # swallow — failing here would mask the protected
-                    # operation's own outcome, and the lease TTL exists
-                    # exactly so an unreleased row is reclaimed (the
-                    # holder row ages past LOCK_STEAL_SECONDS and the
-                    # next waiter steals it)
-                    if attempt < 2:
-                        time.sleep(0.05 * (attempt + 1))
-            if rel is None:
-                import warnings
-
-                warnings.warn(
-                    f"CAS endpoint {self.endpoint} unreachable at release of "
-                    f"{canon!r}: steal detection was SKIPPED for this hold — a "
-                    "mid-hold thief would go unreported here (fence-checked "
-                    "writes still bounce a stale holder at write time)",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                rel = {}
-            # release-time detection is the BACKSTOP: if the body already
-            # raised for this steal (StaleFenceError from the write-time
-            # check), re-raising here would mask the more precise error
-            if rel.get("stolen") and not isinstance(body_exc, LockStolenError):
-                raise LockStolenError(
-                    f"lock on {canon!r} was stolen mid-hold (fence {fence} -> "
-                    f"{rel.get('fence')}): this writer stalled past "
-                    "LOCK_STEAL_SECONDS and its protected operation may have "
-                    "overlapped the thief's — treat the outcome as unknown and re-plan"
-                )
-
-
-class FencedLocalFileIO(LocalFileIO):
-    """LocalFileIO whose exclusive-create enforces a fencing token
-    ATOMICALLY with the put — the role S3 conditional writes / DynamoDB
-    condition expressions / etcd txn revisions play for real object
-    stores, demonstrated on the local medium (r16).
-
-    The endpoint-checked mode (`_FenceHandle.validate()` before the
-    write) leaves one residual: a holder that validates, then stalls a
-    SECOND full TTL before its put, can still land bytes after a
-    thief's. A fencing-capable medium closes that too, because the
-    token check happens atomically with the write itself. Here: a
-    sidecar `<fence_dir>/<sha1>.fence` records the highest fence that
-    ever mutated each path, and `create_exclusive_fenced` runs
-    {read sidecar, compare, put, record} under one flock on the
-    sidecar — a lower-fenced late writer gets `StaleFenceError` with
-    the medium untouched, no matter where it stalled.
-
-    `ArbitratedFileIO` calls `create_exclusive_fenced` automatically
-    when the inner IO exposes it and the mutex yielded a fence token;
-    everything else delegates to plain LocalFileIO. Sidecars are
-    zero-byte-ish, sha1-named (never collide with metadata listings),
-    bounded by the number of distinct fenced paths — the FlockMutex
-    lock-file discipline."""
-
-    def __init__(self, fence_dir: str):
-        self.fence_dir = fence_dir
-        os.makedirs(fence_dir, exist_ok=True)
-
-    def _sidecar(self, path: str) -> str:
-        canon = os.path.realpath(path) if "://" not in path else os.path.normpath(path)
-        name = hashlib.sha1(canon.encode("utf-8")).hexdigest() + ".fence"
-        return os.path.join(self.fence_dir, name)
-
-    def create_exclusive_fenced(self, path: str, data: str, fence: int) -> bool:
-        import fcntl
-
-        fd = os.open(self._sidecar(path), os.O_CREAT | os.O_RDWR, 0o644)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            try:
-                raw = os.read(fd, 64)
-                recorded = int(raw) if raw.strip() else 0
-                if fence < recorded:
-                    raise StaleFenceError(
-                        f"fenced put on {path!r} rejected AT THE MEDIUM: write "
-                        f"carries fence {fence} but the path has already been "
-                        f"mutated under fence {recorded} — a thief acquired "
-                        "after this writer; the put was never issued"
-                    )
-                won = super().create_exclusive(path, data)
-                if won and fence > recorded:
-                    os.lseek(fd, 0, os.SEEK_SET)
-                    os.ftruncate(fd, 0)
-                    os.write(fd, str(fence).encode())
-                return won
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-        finally:
-            os.close(fd)
-
-
 class ArbitratedFileIO(FileIO):
-    """Route `create_exclusive` through an external mutual-exclusion
-    arbiter; delegate everything else to the wrapped FileIO.
+    """Route the commit primitives through an external mutex arbiter;
+    delegate everything else to the wrapped FileIO.
 
-    The seam for stores whose create-no-overwrite is check-then-put
-    (raw S3): under a per-path mutex, check-then-put IS compare-and-
-    swap, so the create_exclusive contract's at-most-one-winner
-    property is restored without changing a single consumer — commits,
-    ref locks, and transaction markers all arbitrate through the one
-    method (see the contract on FileIO.create_exclusive).
+    The seam for stores that cannot arbitrate themselves: an object
+    store's create-no-overwrite is check-then-put, and no kernel lock
+    spans its writers' hosts. Under a per-path mutex, check-then-put IS
+    compare-and-swap, so the create_exclusive contract's
+    at-most-one-winner property is restored without changing a single
+    consumer — commits, ref locks, and transaction markers all
+    arbitrate through the one method (see FileIO.create_exclusive).
+    The floor-checked commit and the log-entry free take the same
+    mutex, so they serialize too.
 
     `mutex(path)` returns a context manager holding exclusive access
-    for that path across ALL cooperating writers. Production backends:
-    a DynamoDB conditional-put lock (what Iceberg's S3 lock manager
-    did), ZooKeeper/etcd, or a catalog service's commit endpoint (the
-    Nessie role in the reference stack). The default is a process-local
-    lock registry — correct for many threads in one process, a
-    documented NON-solution for separate processes (matching the
-    single-node scope in SURVEY.md §4); tests inject doubles through
-    the same parameter to prove the race and its fix.
+    for that path across ALL cooperating writers; see the contract
+    above. The production backend is `EndpointMutex`, a lease-and-fence
+    conditional-put service (DynamoDB lock table, a catalog's commit
+    endpoint — the Nessie role in the reference stack). `FlockMutex`
+    also conforms, at host scope.
 
-    FENCE-CHECKED WRITES (r16): when the mutex's context manager
-    yields a handle exposing `validate()` (HttpCasMutex does — the
-    endpoint's conditional check), `create_exclusive` calls it under
-    the held lock immediately before the inner write. A holder that
-    stalled past LOCK_STEAL_SECONDS while a thief took the path gets
-    `StaleFenceError` and its write is NEVER ISSUED — the overlap
-    release-time LockStolenError only reports is closed at the write.
-    `fence_writes=False` opts out (measurement / compat only; fencing
-    is strictly safer). Backends that yield nothing (FlockMutex,
-    EndpointMutex, the default thread-lock registry) skip the check:
-    their crash-liveness story doesn't admit a same-process stalled
-    holder overlapping (flock: release is tied to process lifetime) or
-    they predate fence issuance (documented clause-4 caveat)."""
+    FENCE-CHECKED WRITES: when the mutex yields a handle
+    (EndpointMutex does), its `validate()` runs under the hold
+    immediately before the write. A holder that stalled past
+    LOCK_STEAL_SECONDS while a thief took the path gets
+    `StaleFenceError` and its write is never issued."""
 
-    def __init__(self, inner: FileIO, mutex=None, fence_writes: bool = True):
+    def __init__(self, inner: FileIO, mutex):
         self._inner = inner
-        self._fence_writes = fence_writes
-        if mutex is None:
-            import collections
-            import threading
-
-            locks: dict[str, threading.Lock] = collections.defaultdict(
-                threading.Lock
-            )
-            registry_guard = threading.Lock()
-
-            def mutex(path: str):
-                with registry_guard:
-                    return locks[path]
-
         self._mutex = mutex
 
     def create_exclusive(self, path: str, data: str) -> bool:
-        with self._mutex(path) as handle:
-            validate = getattr(handle, "validate", None)
-            if self._fence_writes and callable(validate):
-                validate()  # StaleFenceError: write rejected, not issued
-            fence = getattr(handle, "fence", None)
-            fenced_put = getattr(self._inner, "create_exclusive_fenced", None)
-            if self._fence_writes and fence is not None and callable(fenced_put):
-                # fencing-capable MEDIUM (FencedLocalFileIO; real-world:
-                # S3 conditional writes, DynamoDB condition expressions):
-                # the token check is atomic with the put, closing even
-                # the validate->write stall residual
-                return fenced_put(path, data, fence)
-            return self._inner.create_exclusive(path, data)
+        return self.create_exclusive_guarded(path, data, lambda: True)
 
     def create_exclusive_guarded(self, path: str, data: str, precondition) -> bool:
-        """Run `precondition()` INSIDE the per-path mutex hold, then the
-        exclusive create under the same hold. Entry removal takes the
-        same mutex (`remove_arbitrated`), so "slot freed by expiry" and
-        "slot claimed by a commit" serialize: a freed slot is always
-        preceded by a visible checkpoint at or above it (expiry
-        checkpoints before dropping), so the commit's floor
-        precondition cannot miss it — the unbounded stall window lived
-        exactly here, between choosing a version and acquiring this
-        mutex (r17 lost-commit fix)."""
         with self._mutex(path) as handle:
-            validate = getattr(handle, "validate", None)
-            if self._fence_writes and callable(validate):
-                validate()
+            if handle is not None:
+                handle.validate()  # StaleFenceError: write rejected, not issued
             if not precondition():
                 return False
-            fence = getattr(handle, "fence", None)
-            fenced_put = getattr(self._inner, "create_exclusive_fenced", None)
-            if self._fence_writes and fence is not None and callable(fenced_put):
-                return fenced_put(path, data, fence)
+            # the inner store's PLAIN create: its guarded create may lock
+            # the same directory (LocalFileIO), which this hold would
+            # wait on forever under FlockMutex
             return self._inner.create_exclusive(path, data)
 
     def remove_arbitrated(self, path: str) -> None:

@@ -5,7 +5,7 @@ ONE substrate: Spark writes Iceberg tables and Trino reads the same
 committed table format through the same Nessie catalog
 (/root/reference/trino/catalog/iceberg.properties:2-7 — SURVEY.md §3
 EP3). This module plays that second-engine role for the DuckDB oracle:
-lifecycle registry queries leave their throwaway warehouse at a FIXED
+lifecycle registry queries leave their throwaway warehouse at a known
 path (`fresh_wh`), and their oracle SQL — generated here at import
 time — re-resolves the committed table state INDEPENDENTLY inside
 DuckDB, with no Spark and no engine code in the loop:
@@ -32,20 +32,37 @@ literals: if the engine commits the wrong file set, mis-applies a
 delete file, or resurrects an expired snapshot, the second engine's
 fold disagrees and the value hash mismatches.
 
-Concurrency caveat: the fixed warehouse path means two processes
-running the SAME registry entry concurrently can interleave (the
-oracle would read the other run's — identical at equal sf —
-warehouse). Sweeps are serial per process and rounds run them alone;
-documented, not defended.
+The warehouses live under a per-process temporary root, created at
+import and removed when the process exits: the Spark run (`fresh_wh`)
+and its oracle SQL (`wh_dir`, the import-time `TableResolver`s) always
+run in one process, and two processes running the same registry entry
+at once each get their own warehouse.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
+import tempfile
 
-SECOND_ENGINE_ROOT = "/tmp/spark_graft_secondengine"
+# the fixed last component keeps every warehouse path (and so every
+# second-engine oracle's SQL) recognisable by its `_secondengine/` part
+_PROCESS_TMP = tempfile.mkdtemp(prefix="spark_graft-")
+SECOND_ENGINE_ROOT = os.path.join(_PROCESS_TMP, "spark_graft_secondengine")
+os.makedirs(SECOND_ENGINE_ROOT)
+_ROOT_OWNER = os.getpid()
+
+
+def _remove_root() -> None:
+    # a forked child that exits normally runs the parent's atexit
+    # hooks too; only the creating process owns the root
+    if os.getpid() == _ROOT_OWNER:
+        shutil.rmtree(_PROCESS_TMP, ignore_errors=True)
+
+
+atexit.register(_remove_root)
 
 # Typed projections for read_json: we control the log format (log.py
 # LogEntry/FileInfo asdict), so the oracle pins exactly the fields the
@@ -87,7 +104,7 @@ def wh_dir(query_name: str) -> str:
 
 
 def fresh_wh(query_name: str) -> str:
-    """Recreate the fixed warehouse dir for a second-engine-checked
+    """Recreate the warehouse dir for a second-engine-checked
     registry query. Left on disk after the run — the oracle reads it.
     A sentinel txn marker keeps the oracle's .txns glob non-empty."""
     d = wh_dir(query_name)

@@ -23,23 +23,3 @@ def sf_small() -> str:
 def sf_oracle() -> str:
     return SF_ORACLE
 
-
-@pytest.fixture(scope="session")
-def casd_endpoint():
-    """One casd.py HTTP lock server for the whole session (the
-    remote-shaped conditional-put arbiter); tests key on
-    tmp_path-unique lock paths so state never crosses tests."""
-    import subprocess
-    import sys
-
-    p = subprocess.Popen(
-        [sys.executable, "-m", "local_datalakehouse_phase2_spark.lakehouse.casd"],
-        stdout=subprocess.PIPE,
-        text=True,
-    )
-    line = p.stdout.readline()
-    assert line.startswith("CASD LISTENING "), line
-    port = int(line.split()[-1])
-    yield f"http://127.0.0.1:{port}"
-    p.terminate()
-    p.wait(timeout=10)

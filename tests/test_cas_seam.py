@@ -6,9 +6,10 @@ exact failure Iceberg's pair-S3-with-a-catalog guidance exists for.
 `RacyFileIO` simulates that store (a barrier forces both racers into
 the check-to-put gap); each test first DEMONSTRATES the lost-update on
 the naive store, then proves `ArbitratedFileIO` (the injectable mutex
-seam a DynamoDB/ZooKeeper/catalog backend would implement) restores
-the at-most-one-winner contract for all three consumers of the
-primitive: log-entry commits, per-ref advisory locks, and multi-table
+seam a DynamoDB/ZooKeeper/catalog backend would implement; here
+`FlockMutex`, which also excludes threads) restores the
+at-most-one-winner contract for all three consumers of the primitive:
+log-entry commits, per-ref advisory locks, and multi-table
 transaction markers.
 
 No Spark involvement: this layer is pure metadata IO.
@@ -24,6 +25,8 @@ import pytest
 
 from local_datalakehouse_phase2_spark.lakehouse.fs import (
     ArbitratedFileIO,
+    FileIO,
+    FlockMutex,
     LocalFileIO,
 )
 from local_datalakehouse_phase2_spark.lakehouse.log import LogEntry, TransactionLog
@@ -60,6 +63,12 @@ class RacyFileIO(LocalFileIO):
         """
         self.barrier = threading.Barrier(2)
         return self.barrier
+
+    # An object store has no kernel lock: the floor-checked commit and
+    # the entry free are the unguarded base versions, not LocalFileIO's
+    # directory-locked ones.
+    create_exclusive_guarded = FileIO.create_exclusive_guarded
+    remove_arbitrated = FileIO.remove_arbitrated
 
     def create_exclusive(self, path: str, data: str) -> bool:
         if os.path.exists(path):  # the CHECK
@@ -132,7 +141,7 @@ def test_commit_race_naive_loses_then_arbiter_fixes(tmp_path):
     # ARBITRATED: same racy store under the mutex seam — check-then-put
     # becomes CAS, the loser retries at the next version, nothing lost.
     io2 = RacyFileIO()
-    log2 = _mk_log(tmp_path, ArbitratedFileIO(io2), "locked")
+    log2 = _mk_log(tmp_path, ArbitratedFileIO(io2, FlockMutex()), "locked")
     log2.append(_entry_maker("seed"))
     io2.arm()  # under the mutex the waits time out (serialized) — by design
     a, b = _race(
@@ -176,7 +185,7 @@ def test_ref_lock_race_naive_overlaps_then_arbiter_excludes(tmp_path):
     assert run_pair(racy_naive, "reflock_naive", racy_naive)
     assert not racy_naive.barrier.broken
     racy_locked = RacyFileIO()
-    assert not run_pair(ArbitratedFileIO(racy_locked), "reflock_locked", racy_locked)
+    assert not run_pair(ArbitratedFileIO(racy_locked, FlockMutex()), "reflock_locked", racy_locked)
 
 
 def test_txn_marker_race_naive_contradicts_then_arbiter_decides(tmp_path, spark):
@@ -235,7 +244,7 @@ def test_txn_marker_race_naive_contradicts_then_arbiter_decides(tmp_path, spark)
     # ARBITRATED: one winner; every observer agrees with the marker.
     racy2 = RacyFileIO()
     committed_reported, final, rows, res = run_pair(
-        ArbitratedFileIO(racy2), "locked", racy2
+        ArbitratedFileIO(racy2, FlockMutex()), "locked", racy2
     )
     if final == "committed":
         assert committed_reported and (2, "b") in rows

@@ -5,12 +5,10 @@ tests/test_flock_mutex.py proves host-wide arbitration; its docstring
 no kernel, so flock cannot arbitrate them — the reference stack
 delegates that role to a catalog endpoint (Nessie,
 docker-compose.yml:6). This file simulates two nodes as two forked
-processes that share NO lock directory — each gets its OWN FlockMutex
-lock_dir, exactly the two-independent-kernels situation — and proves:
+processes over the racy S3-style store that share nothing but the
+endpoint, and proves:
 
 - the naive store loses a commit (both pass the version check);
-- FlockMutex with per-node lock dirs ALSO loses it (the documented
-  limitation, demonstrated rather than asserted in prose);
 - EndpointMutex over one shared sqlite endpoint (the conditional-put
   pattern of a DynamoDB lock table / Nessie commit endpoint) loses
   nothing — with zero changes to any consumer, which is the seam's
@@ -27,7 +25,6 @@ import time
 from local_datalakehouse_phase2_spark.lakehouse.fs import (
     ArbitratedFileIO,
     EndpointMutex,
-    FlockMutex,
 )
 from local_datalakehouse_phase2_spark.lakehouse.log import TransactionLog
 
@@ -36,24 +33,20 @@ from .test_cas_seam import RacyFileIO, _entry_maker
 _MP = multiprocessing.get_context("fork")
 
 
-def _mk_io(barrier, backend):
+def _mk_io(barrier, db):
     io = RacyFileIO(barrier)
-    if backend is None:
-        return io
-    kind, arg = backend
-    mutex = FlockMutex(arg) if kind == "flock" else EndpointMutex(arg)
-    return ArbitratedFileIO(io, mutex=mutex)
+    return io if db is None else ArbitratedFileIO(io, mutex=EndpointMutex(db))
 
 
-def _append_worker(meta_dir, barrier, tag, backend):
-    log = TransactionLog(meta_dir, io=_mk_io(barrier, backend))
+def _append_worker(meta_dir, barrier, tag, db):
+    log = TransactionLog(meta_dir, io=_mk_io(barrier, db))
     log.append(_entry_maker(tag))
 
 
-def _race(meta_dir, backend_a, backend_b):
+def _race(meta_dir, db):
     barrier = _MP.Barrier(2)
-    pa = _MP.Process(target=_append_worker, args=(meta_dir, barrier, "a", backend_a))
-    pb = _MP.Process(target=_append_worker, args=(meta_dir, barrier, "b", backend_b))
+    pa = _MP.Process(target=_append_worker, args=(meta_dir, barrier, "a", db))
+    pb = _MP.Process(target=_append_worker, args=(meta_dir, barrier, "b", db))
     pa.start(), pb.start()
     pa.join(20), pb.join(20)
     assert pa.exitcode == 0 and pb.exitcode == 0
@@ -73,28 +66,14 @@ def _writers(meta):
 
 def test_two_nodes_naive_store_loses(tmp_path):
     meta = _seeded(tmp_path, "naive")
-    _race(meta, None, None)
+    _race(meta, None)
     assert len(_writers(meta)) == 2  # 3 commits made, 2 survive: LOST
-
-
-def test_two_nodes_flock_with_separate_lock_dirs_loses(tmp_path):
-    """The documented FlockMutex limitation, made empirical: each
-    'node' locks in its own directory (two kernels = no shared flock
-    inode), so the mutex grants no exclusion and the race still loses
-    a commit."""
-    meta = _seeded(tmp_path, "flock2node")
-    _race(
-        meta,
-        ("flock", str(tmp_path / "node_a_locks")),
-        ("flock", str(tmp_path / "node_b_locks")),
-    )
-    assert len(_writers(meta)) == 2  # LOST — flock is host-wide only
 
 
 def test_two_nodes_endpoint_mutex_loses_nothing(tmp_path):
     meta = _seeded(tmp_path, "endpoint")
     db = str(tmp_path / "endpoint.db")  # the shared 'catalog service'
-    _race(meta, ("endpoint", db), ("endpoint", db))
+    _race(meta, db)
     assert _writers(meta) == {"seed", "a", "b"}  # all three survive
 
 
@@ -124,7 +103,7 @@ def test_endpoint_mutex_contention_loop(tmp_path):
     every commit survives, versions stay dense."""
 
     def worker(meta, db, tag, n, out_dir):
-        log = TransactionLog(meta, io=_mk_io(None, ("endpoint", db)))
+        log = TransactionLog(meta, io=_mk_io(None, db))
         for i in range(n):
             log.append(_entry_maker(f"{tag}{i}"))
         with open(os.path.join(out_dir, f"{tag}.json"), "w") as f:

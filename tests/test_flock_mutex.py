@@ -1,10 +1,9 @@
 """Cross-PROCESS CAS arbitration via FlockMutex (VERDICT r9 task #4).
 
 tests/test_cas_seam.py proves the ArbitratedFileIO contract between
-THREADS, where the default process-local mutex suffices. This file
-re-proves all three consumers of `create_exclusive` between real OS
-processes — where threading.Lock is a documented non-solution — using
-the flock(2) backend:
+THREADS. This file re-proves all three consumers of `create_exclusive`
+between real OS processes, using the flock(2) backend over the racy
+S3-style store:
 
 - log-entry commits: the naive racy store loses one of two concurrent
   appends; under FlockMutex the loser retries at the next version and
@@ -30,6 +29,7 @@ import time
 from local_datalakehouse_phase2_spark.lakehouse.fs import (
     ArbitratedFileIO,
     FlockMutex,
+    LocalFileIO,
 )
 from local_datalakehouse_phase2_spark.lakehouse.log import TransactionLog
 
@@ -38,18 +38,18 @@ from .test_cas_seam import RacyFileIO, _entry_maker
 _MP = multiprocessing.get_context("fork")
 
 
-def _mk_io(barrier, lock_dir):
+def _mk_io(barrier, locked):
     io = RacyFileIO(barrier)
-    return ArbitratedFileIO(io, mutex=FlockMutex(lock_dir)) if lock_dir else io
+    return ArbitratedFileIO(io, mutex=FlockMutex()) if locked else io
 
 
-def _append_worker(meta_dir, barrier, tag, lock_dir):
-    log = TransactionLog(meta_dir, io=_mk_io(barrier, lock_dir))
+def _append_worker(meta_dir, barrier, tag, locked):
+    log = TransactionLog(meta_dir, io=_mk_io(barrier, locked))
     log.append(_entry_maker(tag))
 
 
-def _reflock_worker(meta_dir, barrier, tag, lock_dir, out_dir):
-    log = TransactionLog(meta_dir, io=_mk_io(barrier, lock_dir))
+def _reflock_worker(meta_dir, barrier, tag, locked, out_dir):
+    log = TransactionLog(meta_dir, io=_mk_io(barrier, locked))
 
     def critical():
         start = time.monotonic()
@@ -61,8 +61,8 @@ def _reflock_worker(meta_dir, barrier, tag, lock_dir, out_dir):
         json.dump({"start": start, "end": end}, f)
 
 
-def _marker_worker(marker_path, barrier, tag, lock_dir, out_dir):
-    io = _mk_io(barrier, lock_dir)
+def _marker_worker(marker_path, barrier, tag, locked, out_dir):
+    io = _mk_io(barrier, locked)
     won = io.create_exclusive(marker_path, json.dumps({"decider": tag}))
     with open(os.path.join(out_dir, f"{tag}.json"), "w") as f:
         json.dump({"won": won}, f)
@@ -88,18 +88,17 @@ def test_commit_race_two_processes(tmp_path):
     # (barrier), both PUT, one commit vanishes.
     meta, log = _seeded_log(tmp_path, "naive")
     barrier = _MP.Barrier(2)
-    _race_procs(_append_worker, (meta, barrier, "a", None), (meta, barrier, "b", None))
+    _race_procs(_append_worker, (meta, barrier, "a", False), (meta, barrier, "b", False))
     assert len(TransactionLog(meta, io=RacyFileIO()).versions()) == 2  # LOST
 
     # FLOCK: same racy store, kernel-mediated mutex — loser retries,
     # nothing lost, every writer's entry present.
     meta2, _ = _seeded_log(tmp_path, "locked")
-    lock_dir = str(tmp_path / "locks")
     barrier2 = _MP.Barrier(2)
     _race_procs(
         _append_worker,
-        (meta2, barrier2, "a", lock_dir),
-        (meta2, barrier2, "b", lock_dir),
+        (meta2, barrier2, "a", True),
+        (meta2, barrier2, "b", True),
     )
     log2 = TransactionLog(meta2, io=RacyFileIO())
     assert len(log2.versions()) == 3
@@ -108,7 +107,7 @@ def test_commit_race_two_processes(tmp_path):
 
 
 def test_ref_lock_race_two_processes(tmp_path):
-    def run_pair(name, lock_dir):
+    def run_pair(name, locked):
         meta, log = _seeded_log(tmp_path, name)
         log.create_ref("dev", 0, kind="branch")
         out = str(tmp_path / f"{name}_out")
@@ -116,8 +115,8 @@ def test_ref_lock_race_two_processes(tmp_path):
         barrier = _MP.Barrier(2)
         _race_procs(
             _reflock_worker,
-            (meta, barrier, "a", lock_dir, out),
-            (meta, barrier, "b", lock_dir, out),
+            (meta, barrier, "a", locked, out),
+            (meta, barrier, "b", locked, out),
         )
         spans = [
             json.load(open(os.path.join(out, f"{t}.json"))) for t in ("a", "b")
@@ -125,12 +124,12 @@ def test_ref_lock_race_two_processes(tmp_path):
         a, b = sorted(spans, key=lambda s: s["start"])
         return a["end"] > b["start"]  # critical sections overlapped?
 
-    assert run_pair("reflock_naive", None)
-    assert not run_pair("reflock_locked", str(tmp_path / "locks2"))
+    assert run_pair("reflock_naive", False)
+    assert not run_pair("reflock_locked", True)
 
 
 def test_marker_race_two_processes(tmp_path):
-    def run_pair(name, lock_dir):
+    def run_pair(name, locked):
         d = tmp_path / name
         os.makedirs(d)
         out = str(tmp_path / f"{name}_out")
@@ -138,16 +137,16 @@ def test_marker_race_two_processes(tmp_path):
         barrier = _MP.Barrier(2)
         _race_procs(
             _marker_worker,
-            (str(d / "txn.json"), barrier, "commit", lock_dir, out),
-            (str(d / "txn.json"), barrier, "abort", lock_dir, out),
+            (str(d / "txn.json"), barrier, "commit", locked, out),
+            (str(d / "txn.json"), barrier, "abort", locked, out),
         )
         return sum(
             json.load(open(os.path.join(out, f"{t}.json")))["won"]
             for t in ("commit", "abort")
         )
 
-    assert run_pair("marker_naive", None) == 2  # both believe they decided
-    assert run_pair("marker_locked", str(tmp_path / "locks3")) == 1  # one winner
+    assert run_pair("marker_naive", False) == 2  # both believe they decided
+    assert run_pair("marker_locked", True) == 1  # one winner
 
 
 # ---- maintenance-under-live-ingest stress (VERDICT r10 task #6) ------
@@ -156,9 +155,10 @@ def test_marker_race_two_processes(tmp_path):
 # This composes them the way a real deployment does: one process
 # appending in a loop (a writer job) vs one process running the
 # maintenance cycle (manifest checkpoint -> synthetic compaction ->
-# expiry -> orphan sweep) — both over the SAME racy S3-style store
-# arbitrated only by ArbitratedFileIO(FlockMutex). Invariants checked
-# afterwards from a clean reader:
+# expiry -> orphan sweep) — both over the SAME store: the plain
+# LocalFileIO default with no wrapper, or the racy S3-style store
+# arbitrated only by ArbitratedFileIO(FlockMutex or EndpointMutex).
+# Invariants checked afterwards from a clean reader:
 #   - no lost commit: every writer append survives into the final
 #     state's row-count total (compaction preserves totals by
 #     construction, expiry never touches the current state);
@@ -168,19 +168,21 @@ def test_marker_race_two_processes(tmp_path):
 #     snapshot references exists on disk.
 
 
-def _stress_mutex(backend):
+def _stress_io(backend):
     kind, arg = backend
+    if kind == "default":
+        return LocalFileIO()
     if kind == "flock":
-        return FlockMutex(arg)
+        return ArbitratedFileIO(RacyFileIO(), mutex=FlockMutex())
     from local_datalakehouse_phase2_spark.lakehouse.fs import EndpointMutex
 
-    return EndpointMutex(arg)
+    return ArbitratedFileIO(RacyFileIO(), mutex=EndpointMutex(arg))
 
 
 def _stress_writer(table_dir, backend, n_appends):
     from local_datalakehouse_phase2_spark.lakehouse.log import FileInfo
 
-    io = ArbitratedFileIO(RacyFileIO(), mutex=_stress_mutex(backend))
+    io = _stress_io(backend)
     log = TransactionLog(os.path.join(table_dir, "metadata"), io=io)
     from local_datalakehouse_phase2_spark.lakehouse.log import LogEntry
 
@@ -211,7 +213,7 @@ def _stress_maintenance(table_dir, backend, iterations, out_path):
     )
     from local_datalakehouse_phase2_spark.lakehouse.log import FileInfo, LogEntry
 
-    io = ArbitratedFileIO(RacyFileIO(), mutex=_stress_mutex(backend))
+    io = _stress_io(backend)
     table = LakehouseTable(None, "lab.stress", table_dir, io=io)
     done = {"checkpoints": 0, "compactions": 0, "expiries": 0, "orphan_runs": 0}
     for it in range(iterations):
@@ -257,17 +259,13 @@ def _stress_maintenance(table_dir, backend, iterations, out_path):
 import pytest
 
 
-@pytest.mark.parametrize("backend_kind", ["flock", "endpoint"])
+@pytest.mark.parametrize("backend_kind", ["default", "flock", "endpoint"])
 def test_maintenance_under_live_ingest_stress(tmp_path, backend_kind):
     from local_datalakehouse_phase2_spark.lakehouse import LakehouseTable
     from local_datalakehouse_phase2_spark.lakehouse.log import LogEntry
 
     table_dir = str(tmp_path / "stress_t")
-    backend = (
-        ("flock", str(tmp_path / "stress_locks"))
-        if backend_kind == "flock"
-        else ("endpoint", str(tmp_path / "stress.db"))
-    )
+    backend = (backend_kind, str(tmp_path / "stress.db"))
     os.makedirs(os.path.join(table_dir, "data"))
     # seed v0 (un-contended) so both processes see an existing table
     seed_log = TransactionLog(os.path.join(table_dir, "metadata"), io=RacyFileIO())

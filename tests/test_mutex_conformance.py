@@ -13,12 +13,14 @@ Backends under test here:
   DynamoDB/Nessie commit-arbiter role (reference stack:
   spark/conf/spark-defaults.conf Nessie catalog; docker-compose
   delegates commit arbitration to the Nessie service);
-- flock-shared-dir: FlockMutex over ONE lock dir — the host-scope
-  adapter (two processes on one kernel), which must satisfy the same
-  contract at its documented scope.
+- flock-shared-dir: FlockMutex on the resource's shared directory —
+  the host-scope arbiter LocalFileIO itself uses (two processes on one
+  kernel), which must satisfy the same contract at its documented
+  scope.
 
 Workers are forked processes sharing nothing but the backend's own
-medium (db file / lock dir) plus the data files the races target.
+medium (db file / directory inode) plus the data files the races
+target.
 """
 
 from __future__ import annotations
@@ -33,28 +35,23 @@ from local_datalakehouse_phase2_spark.lakehouse.fs import (
     ArbitratedFileIO,
     EndpointMutex,
     FlockMutex,
-    HttpCasMutex,
     LocalFileIO,
     LockStolenError,
 )
 
 _MP = multiprocessing.get_context("fork")
 
-# spec -> constructible INSIDE a forked worker (picklable tuple).
-# "http-cas" is the genuinely remote-shaped one (r15): workers share
-# NOTHING but the TCP endpoint of a casd.py server subprocess.
+# spec -> constructible INSIDE a forked worker (picklable tuple)
 BACKENDS = [
     pytest.param(("endpoint", "endpoint.db"), id="endpoint-sqlite"),
-    pytest.param(("flock", "shared_locks"), id="flock-shared-dir"),
-    pytest.param(("http", None), id="http-cas"),
+    pytest.param(("flock", None), id="flock-shared-dir"),
 ]
 # backends whose crash-liveness mechanism is a TTL steal on the holder
 # record (clause 4's lease half; flock releases via the kernel instead)
 LEASE_BACKENDS = [
     pytest.param(("endpoint", "endpoint.db"), id="endpoint-sqlite"),
-    pytest.param(("http", None), id="http-cas"),
 ]
-_LEASE_KINDS = ("endpoint", "http")
+_LEASE_KINDS = ("endpoint",)
 
 
 def _make_mutex(spec, **kw):
@@ -62,21 +59,13 @@ def _make_mutex(spec, **kw):
     if kind == "endpoint":
         return EndpointMutex(arg, **kw)
     if kind == "flock":
-        return FlockMutex(arg)
-    if kind == "http":
-        return HttpCasMutex(arg, **kw)
+        return FlockMutex()
     raise ValueError(kind)
-
-
-# casd_endpoint fixture lives in conftest.py (shared with the
-# end-to-end lifecycle test in test_r15_races.py)
 
 
 def _spec(request, tmp_path):
     kind, rel = request.param
-    if kind == "http":
-        return (kind, request.getfixturevalue("casd_endpoint"))
-    return (kind, str(tmp_path / rel))
+    return (kind, rel and str(tmp_path / rel))
 
 
 @pytest.fixture(params=BACKENDS)
@@ -225,20 +214,14 @@ def test_live_holder_not_stolen(lease_backend, tmp_path):
 def _seed_stale_row(spec, lock_path):
     mutex = _make_mutex(spec)
     canon = os.path.realpath(lock_path)
-    if spec[0] == "endpoint":
-        con = mutex._connect()
-        con.execute(
-            "INSERT INTO locks VALUES (?, ?, ?)",
-            (canon, "dead-proc", time.time() - 3600.0),
-        )
-        con.close()
-    elif spec[0] == "http":
-        mutex._post(
-            "/_seed",
-            {"path": canon, "owner": "dead-proc", "acquired_at": time.time() - 3600.0},
-        )
-    else:
+    if spec[0] != "endpoint":
         raise ValueError(spec[0])
+    con = mutex._connect()
+    con.execute(
+        "INSERT INTO locks VALUES (?, ?, ?)",
+        (canon, "dead-proc", time.time() - 3600.0),
+    )
+    con.close()
 
 
 def _thief_worker(spec, lock_path, counter_path, n):
@@ -267,14 +250,14 @@ def test_concurrent_thieves_exclude(lease_backend, tmp_path):
     assert open(counter).read() == "50"
 
 
-# ---- clause 4d (fencing, http-cas only): stolen holder learns loudly
+# ---- clause 4d (fencing, lease backends): stolen holder learns loudly
 
 
-def _stall_past_ttl(endpoint, lock_path, held_evt, stolen_evt, out_path):
+def _stall_past_ttl(db, lock_path, held_evt, stolen_evt, out_path):
     from local_datalakehouse_phase2_spark.lakehouse import log as lh_log
 
     lh_log.LOCK_STEAL_SECONDS = 0.3
-    mutex = HttpCasMutex(endpoint, timeout_s=20.0)
+    mutex = EndpointMutex(db, timeout_s=20.0)
     try:
         with mutex(lock_path):
             held_evt.set()
@@ -287,16 +270,17 @@ def _stall_past_ttl(endpoint, lock_path, held_evt, stolen_evt, out_path):
             f.write("silent")
 
 
-def test_fence_reports_stolen_holder(casd_endpoint, tmp_path):
+def test_fence_reports_stolen_holder(tmp_path):
     """The stalled-holder-past-TTL caveat, made LOUD by the fence
     token: a holder that stalls past LOCK_STEAL_SECONDS while a thief
     acquires must get LockStolenError at release — never a silent
-    normal exit — and the thief's fence must exceed the victim's."""
+    normal exit."""
+    db = str(tmp_path / "endpoint.db")
     lock_target = str(tmp_path / "res")
     out = str(tmp_path / "verdict")
     held, stolen = _MP.Event(), _MP.Event()
     victim = _MP.Process(
-        target=_stall_past_ttl, args=(casd_endpoint, lock_target, held, stolen, out)
+        target=_stall_past_ttl, args=(db, lock_target, held, stolen, out)
     )
     victim.start()
     assert held.wait(10)
@@ -306,7 +290,7 @@ def test_fence_reports_stolen_holder(casd_endpoint, tmp_path):
     old = lh_log.LOCK_STEAL_SECONDS
     lh_log.LOCK_STEAL_SECONDS = 0.3
     try:
-        thief = HttpCasMutex(casd_endpoint, timeout_s=10.0)
+        thief = EndpointMutex(db, timeout_s=10.0)
         with thief(lock_target):
             pass  # thief holds and releases cleanly (its fence is newest)
     finally:
@@ -316,61 +300,32 @@ def test_fence_reports_stolen_holder(casd_endpoint, tmp_path):
     assert open(out).read() == "stolen-detected"
 
 
-def test_fence_monotone_across_steal(casd_endpoint, tmp_path):
+def test_fence_monotone_across_steal(tmp_path):
     """Fence tokens are per-path monotone across insert, steal and
-    re-acquire — the property a fencing-capable medium relies on."""
-    mutex = HttpCasMutex(casd_endpoint)
-    canon = os.path.realpath(str(tmp_path / "res"))
-    f1 = mutex._post(
-        "/acquire", {"path": canon, "owner": "a", "steal_after": 60.0}
-    )["fence"]
-    # stale-seed then steal
-    mutex._post(
-        "/_seed", {"path": canon, "owner": "a", "acquired_at": time.time() - 3600.0}
+    re-acquire — the property a fencing-capable medium relies on —
+    and the robbed holder's release sees the advanced fence."""
+    mutex = EndpointMutex(str(tmp_path / "endpoint.db"))
+    target = str(tmp_path / "res")
+    victim = mutex(target)
+    f1 = victim.__enter__().fence
+    # age the victim's row past the steal horizon, then steal it
+    con = mutex._connect()
+    con.execute(
+        "UPDATE locks SET acquired_at = ? WHERE path = ?",
+        (time.time() - 3600.0, os.path.realpath(target)),
     )
-    f2 = mutex._post(
-        "/acquire", {"path": canon, "owner": "b", "steal_after": 60.0}
-    )["fence"]
-    rel = mutex._post("/release", {"path": canon, "owner": "b", "fence": f2})
-    f3 = mutex._post(
-        "/acquire", {"path": canon, "owner": "c", "steal_after": 60.0}
-    )["fence"]
-    assert f1 < f2 < f3 and rel["released"] and not rel["stolen"]
-    # the victim's release sees the advanced fence
-    rel_a = mutex._post("/release", {"path": canon, "owner": "a", "fence": f1})
-    assert rel_a["stolen"] and not rel_a["released"]
+    con.close()
+    with mutex(target) as thief:
+        f2 = thief.fence
+    with mutex(target) as later:
+        f3 = later.fence
+    assert f1 < f2 < f3
+    with pytest.raises(LockStolenError):
+        victim.__exit__(None, None, None)
 
 
-def test_release_tolerates_dead_endpoint(tmp_path):
-    """An endpoint that dies mid-hold must not mask the protected
-    operation's outcome: release swallows the network failure (the
-    lease TTL reclaims the row) instead of raising."""
-    import subprocess
-    import sys
-
-    p = subprocess.Popen(
-        [sys.executable, "-m", "local_datalakehouse_phase2_spark.lakehouse.casd"],
-        stdout=subprocess.PIPE,
-        text=True,
-    )
-    try:
-        line = p.stdout.readline()
-        port = int(line.split()[-1])
-        mutex = HttpCasMutex(f"http://127.0.0.1:{port}", timeout_s=5.0)
-        outcome = []
-        with mutex(str(tmp_path / "res")):
-            p.terminate()
-            p.wait(timeout=10)
-            outcome.append("work-done")
-        assert outcome == ["work-done"]  # exit did not raise
-    finally:
-        if p.poll() is None:
-            p.terminate()
-            p.wait(timeout=10)
-
-
-# ---- clause 4e (fencing at WRITE, both lease backends): stalled
-# holder's commit is REJECTED, not merely flagged (r16, VERDICT item 1)
+# ---- clause 4e (fencing at WRITE, lease backends): stalled holder's
+# commit is REJECTED, not merely flagged (r16, VERDICT item 1)
 
 
 def _stalled_fenced_writer(spec, target, held_evt, resume_evt, out_path):
@@ -432,7 +387,7 @@ def test_fenced_write_rejects_stalled_holder(lease_backend, tmp_path):
     with StaleFenceError BEFORE reaching the medium — the thief's
     bytes stand and the victim learns at the write, not the release.
     This closes the clause-4 lease caveat release-time LockStolenError
-    (clause 4d above) only reports, on BOTH lease backends."""
+    (clause 4d above) only reports."""
     target = str(tmp_path / "res.json")
     held, resume, thief_done = _MP.Event(), _MP.Event(), _MP.Event()
     out = str(tmp_path / "verdict")
@@ -469,111 +424,3 @@ def test_fenced_write_passes_live_holder(lease_backend, tmp_path):
     assert open(target).read() == "healthy"
     # second writer loses by O_EXCL, not by fence (its own fence is fresh)
     assert io.create_exclusive(target, "late") is False
-
-
-# ---- clause 4f (fencing at the MEDIUM): the validate->put stall
-# residual is closed when the token check is atomic with the write
-
-
-def _validate_then_stall_writer(endpoint, fence_dir, target, stalled_evt, resume_evt, out_path):
-    """Victim: acquire + validate succeed, then stall past the TTL
-    BETWEEN the validate and the put — the one window the endpoint-
-    checked mode cannot close. The fenced medium must bounce the late
-    put anyway."""
-    from local_datalakehouse_phase2_spark.lakehouse import log as lh_log
-    from local_datalakehouse_phase2_spark.lakehouse.fs import (
-        ArbitratedFileIO,
-        FencedLocalFileIO,
-        HttpCasMutex,
-        StaleFenceError,
-    )
-
-    lh_log.LOCK_STEAL_SECONDS = 0.3
-
-    class StallBeforePut(FencedLocalFileIO):
-        def create_exclusive_fenced(self, path, data, fence):
-            stalled_evt.set()
-            assert resume_evt.wait(20)  # post-validate, pre-put stall
-            return super().create_exclusive_fenced(path, data, fence)
-
-    io = ArbitratedFileIO(
-        StallBeforePut(fence_dir), mutex=HttpCasMutex(endpoint, timeout_s=20.0)
-    )
-    try:
-        won = io.create_exclusive(target, "victim")
-    except StaleFenceError:
-        verdict = "rejected-at-medium"
-    except Exception as e:  # noqa: BLE001 — record whatever surfaced
-        verdict = f"other:{type(e).__name__}"
-    else:
-        verdict = "wrote" if won else "lost-quietly"
-    with open(out_path, "w") as f:
-        f.write(verdict)
-
-
-def _fenced_medium_thief(endpoint, fence_dir, target, done_evt):
-    from local_datalakehouse_phase2_spark.lakehouse import log as lh_log
-    from local_datalakehouse_phase2_spark.lakehouse.fs import (
-        ArbitratedFileIO,
-        FencedLocalFileIO,
-        HttpCasMutex,
-    )
-
-    lh_log.LOCK_STEAL_SECONDS = 0.3
-    io = ArbitratedFileIO(
-        FencedLocalFileIO(fence_dir), mutex=HttpCasMutex(endpoint, timeout_s=20.0)
-    )
-    assert io.create_exclusive(target, "thief")
-    done_evt.set()
-
-
-def test_fenced_medium_rejects_post_validate_stall(casd_endpoint, tmp_path):
-    """The validate->put residual, closed: the victim's validate
-    passes (it is live at that instant), it stalls a full TTL before
-    its put, the thief steals and commits through the fenced medium —
-    and the victim's late put bounces AT the sidecar check, atomic
-    with the write, leaving the thief's bytes untouched."""
-    target = str(tmp_path / "res.json")
-    fence_dir = str(tmp_path / "fences")
-    stalled, resume, thief_done = _MP.Event(), _MP.Event(), _MP.Event()
-    out = str(tmp_path / "verdict")
-    victim = _MP.Process(
-        target=_validate_then_stall_writer,
-        args=(casd_endpoint, fence_dir, target, stalled, resume, out),
-    )
-    victim.start()
-    assert stalled.wait(10)
-    time.sleep(0.4)  # age the holder row past the lowered TTL
-    thief = _MP.Process(
-        target=_fenced_medium_thief, args=(casd_endpoint, fence_dir, target, thief_done)
-    )
-    thief.start()
-    assert thief_done.wait(10)
-    _join(thief)
-    resume.set()
-    _join(victim)
-    assert open(out).read() == "rejected-at-medium"
-    assert open(target).read() == "thief"
-
-
-def test_fenced_medium_token_rules(tmp_path):
-    """Unit rules of the fenced medium: equal/higher fences write,
-    lower fences bounce with the file untouched, and the recorded
-    fence is monotone."""
-    from local_datalakehouse_phase2_spark.lakehouse.fs import (
-        FencedLocalFileIO,
-        StaleFenceError,
-    )
-
-    io = FencedLocalFileIO(str(tmp_path / "fences"))
-    a = str(tmp_path / "a.json")
-    assert io.create_exclusive_fenced(a, "first", 3)
-    # same path again: O_EXCL loses regardless of fence, no error
-    assert io.create_exclusive_fenced(a, "again", 5) is False
-    b = str(tmp_path / "b.json")
-    assert io.create_exclusive_fenced(b, "b1", 2)
-    os.remove(b)
-    with pytest.raises(StaleFenceError):
-        io.create_exclusive_fenced(b, "late", 1)  # below recorded 2
-    assert not os.path.exists(b)  # the put was never issued
-    assert io.create_exclusive_fenced(b, "b2", 2)  # equal: allowed

@@ -114,9 +114,7 @@ def test_claims_scan_survives_concurrent_checkpointing(spark, tmp_path):
     staged removal — however latest_checkpoint_version() interleaves
     with checkpoint creation. Run under ArbitratedFileIO so the
     arbited create path is the one exercised."""
-    io = ArbitratedFileIO(
-        LocalFileIO(), mutex=FlockMutex(str(tmp_path / "locks"))
-    )
+    io = ArbitratedFileIO(LocalFileIO(), mutex=FlockMutex())
     lake = _lake(spark, tmp_path, io=io)
     t = lake.table("lab.t1")
     # a few plain commits below the txn so checkpoints have room
@@ -202,17 +200,19 @@ def test_staged_pending_implies_intent_present(spark, tmp_path):
     assert cold.log.pending_txn_removed_claims() == {claimed: "inv-txn"}
 
 
-def test_full_lifecycle_through_remote_cas_arbiter(spark, tmp_path, casd_endpoint):
+def test_full_lifecycle_through_remote_cas_arbiter(spark, tmp_path):
     """End-to-end: a Lakehouse whose every create_exclusive routes
-    through the REMOTE HTTP conditional-put arbiter (casd) runs a real
-    lifecycle — appends, a COW delete, a merge, a multi-table txn with
-    a conflicting direct write — and the conflict semantics come out
-    identical to the local-arbiter runs. The conformance kit proves
-    the mutex contract in isolation; this proves the seam carries
-    production traffic."""
-    from local_datalakehouse_phase2_spark.lakehouse.fs import HttpCasMutex
+    through the lease-and-fence conditional-put endpoint (EndpointMutex,
+    the object-store arbiter) runs a real lifecycle — appends, a COW
+    delete, a merge, a multi-table txn with a conflicting direct write
+    — and the conflict semantics come out identical to the default
+    local runs. The conformance kit proves the mutex contract in
+    isolation; this proves the seam carries production traffic."""
+    from local_datalakehouse_phase2_spark.lakehouse.fs import EndpointMutex
 
-    io = ArbitratedFileIO(LocalFileIO(), mutex=HttpCasMutex(casd_endpoint))
+    io = ArbitratedFileIO(
+        LocalFileIO(), mutex=EndpointMutex(str(tmp_path / "endpoint.db"))
+    )
     lake = _lake(spark, tmp_path, io=io)
     t = lake.table("lab.t1")
     t.delete_where("k = 1")

@@ -1,103 +1,12 @@
-"""r16 directed races (VERDICT items 5 and 8).
-
-1. Endpoint outage during release: HttpCasMutex.release now retries
-   then WARNS when the endpoint is unreachable (steal detection
-   skipped) — and with fence-checked writes the dangerous half of that
-   window is closed anyway: a mid-hold thief bounces the stalled
-   holder's write at validate time, endpoint-reachable-at-release or
-   not. The two tests prove both halves.
-
-2. The r16 seam hunt (standing item): intent-sentinel creation racing
-   a checkpoint clamp (log.py txn intents vs write_checkpoint).
+"""r16 directed races: the seam hunt (standing item) — intent-sentinel
+creation racing a checkpoint clamp (log.py txn intents vs
+write_checkpoint), and a fast-write append racing a distribution-mode
+change.
 """
 
 from __future__ import annotations
 
-import threading
 import time
-from contextlib import contextmanager
-
-import pytest
-
-from local_datalakehouse_phase2_spark.lakehouse import log as lh_log
-from local_datalakehouse_phase2_spark.lakehouse.fs import (
-    ArbitratedFileIO,
-    HttpCasMutex,
-    LocalFileIO,
-    StaleFenceError,
-)
-
-
-class _OutageAtRelease(HttpCasMutex):
-    """Endpoint reachable for acquire/validate, DEAD for /release —
-    the partition shape most correlated with holder stalls."""
-
-    def _post(self, route, body):
-        if route == "/release":
-            import urllib.error
-
-            raise urllib.error.URLError("simulated endpoint outage at release")
-        return super()._post(route, body)
-
-
-def test_release_outage_emits_skip_warning(casd_endpoint, tmp_path):
-    """A swallowed release must be LOUD about what it skipped: the
-    holder gets a RuntimeWarning naming the skipped steal detection
-    (pre-r16 the URLError was absorbed without a trace)."""
-    mutex = _OutageAtRelease(casd_endpoint, timeout_s=5.0)
-    with pytest.warns(RuntimeWarning, match="steal detection was SKIPPED"):
-        with mutex(str(tmp_path / "res")):
-            pass
-
-
-def test_stolen_write_bounces_even_when_release_unreachable(casd_endpoint, tmp_path):
-    """The interleaving the r15 swallow left silent: holder stalls past
-    TTL mid-hold, thief steals and commits, holder's endpoint cannot
-    reach /release (so release-time LockStolenError is impossible).
-    Fence-checked writes make the overlap loud anyway — the holder's
-    late write raises StaleFenceError BEFORE touching the medium, and
-    the thief's bytes survive."""
-    target = str(tmp_path / "res.json")
-    old = lh_log.LOCK_STEAL_SECONDS
-    lh_log.LOCK_STEAL_SECONDS = 0.3
-    try:
-        victim_mutex = _OutageAtRelease(casd_endpoint, timeout_s=10.0)
-        held = threading.Event()
-        resume = threading.Event()
-        outcome: list[str] = []
-
-        @contextmanager
-        def stalling_mutex(path):
-            with victim_mutex(path) as handle:
-                held.set()
-                assert resume.wait(20)
-                yield handle
-
-        def victim():
-            io = ArbitratedFileIO(LocalFileIO(), mutex=stalling_mutex)
-            try:
-                with pytest.warns(RuntimeWarning, match="steal detection"):
-                    io.create_exclusive(target, "victim")
-            except StaleFenceError:
-                outcome.append("rejected-at-write")
-            else:
-                outcome.append("silent")
-
-        t = threading.Thread(target=victim)
-        t.start()
-        assert held.wait(10)
-        time.sleep(0.4)  # age the holder row past the lowered TTL
-        thief_io = ArbitratedFileIO(
-            LocalFileIO(), mutex=HttpCasMutex(casd_endpoint, timeout_s=10.0)
-        )
-        assert thief_io.create_exclusive(target, "thief")
-        resume.set()
-        t.join(30)
-        assert not t.is_alive()
-        assert outcome == ["rejected-at-write"]
-        assert open(target).read() == "thief"
-    finally:
-        lh_log.LOCK_STEAL_SECONDS = old
 
 
 # ---- seam hunt (VERDICT r15 item 8) ---------------------------------
